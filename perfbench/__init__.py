@@ -1,0 +1,1 @@
+"""Extraction benchmark; the entry point is perfbench/run.py."""
