@@ -38,6 +38,7 @@ from __future__ import annotations
 import html as _html
 import json
 import re
+from bisect import bisect_left
 from typing import Dict, List, Optional
 
 # --- Hyperparameters (named + valued exactly like dbnet_detector.py:13-17,
@@ -62,16 +63,44 @@ _BLOCK_TAGS = frozenset(
 )
 _SKIP_CONTENT_TAGS = frozenset(("script", "style", "noscript", "template"))
 
-_TAG_RE = re.compile(r"<(/?)([a-zA-Z][a-zA-Z0-9-]*)((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)(/?)>")
+# Every path below grows linearly with payload size (the exact tag path
+# adds a log factor), so no payload can stall a task.
+#
+# Tags.  A tag is ``<(/?)([a-zA-Z][a-zA-Z0-9-]*)((?:"[^"]*"|'[^']*'|[^>"'])*)>``:
+# its attribute scan skips quoted strings and ends at the first ">" outside
+# them.  As a plain ``finditer`` that pattern is quadratic: from every
+# "<name" that cannot reach a ">" it scans to the end of the payload and
+# fails, and the next "<name" scans the same characters again.
+# ``_TAG_SCAN_RE`` makes the ">" optional.  Where the tag closes it matches
+# exactly what the tag pattern matches (group 4 is ">"); where it cannot,
+# the greedy attribute scan stops at an unclosed quote or the payload's
+# end and the match is the run that scan covered (group 4 is empty).  If
+# that run holds no quote, every "<name" inside it scans the same
+# characters to the same dead end, so the whole run is text and the scan
+# goes on after it: one pass, and each character is scanned once.  If the
+# run holds a quote, a "<name" inside a quoted string may close where the
+# outer one could not; ``_exact_tags`` then finds every tag of the
+# payload from a table of where each scan ends.  The attribute group is
+# written as unquoted runs between quoted strings, which matches the same
+# text a run at a time instead of a character at a time.
+_TAG_SCAN_RE = re.compile(
+    r"<(/?)([a-zA-Z][a-zA-Z0-9-]*)([^>\"']*(?:(?:\"[^\"]*\"|'[^']*')[^>\"']*)*)(>?)"
+)
+_TAG_START_RE = re.compile(r"</?[a-zA-Z]")
+_TAG_STOP_RE = re.compile(r"[>\"']")
 _HTML_HINT_RE = re.compile(
     r"<(?:!doctype|html|head|body|div|p|nav|header|footer|h[1-6]|ul|ol|li|a|span|"
     r"table|article|section|title|br|em|strong|b|i)\b",
     re.IGNORECASE,
 )
 _MARKUP_FENCE_RE = re.compile(r"```(?:[a-zA-Z0-9_+-]*)\n(.*?)```", re.DOTALL)
-_MARKUP_TAG_RE = re.compile(
-    r"<(output|result|tool_result|stdout|stderr)>(.*?)</\1>", re.DOTALL | re.IGNORECASE
-)
+# Tagged regions are the matches of
+# ``<(output|result|tool_result|stdout|stderr)>(.*?)</\1>`` (DOTALL,
+# IGNORECASE).  Searched as one pattern, every open tag without a close tag
+# scans to the end of the payload, so ``_markup_tag_regions`` finds the
+# same matches from the open and close tags alone.
+_MARKUP_OPEN_RE = re.compile(r"<(output|result|tool_result|stdout|stderr)>", re.IGNORECASE)
+_MARKUP_CLOSE_RE = re.compile(r"</(output|result|tool_result|stdout|stderr)>", re.IGNORECASE)
 # Characters swallowed by span expansion (the "whitespace/punctuation margin").
 _EXPANDABLE = " \t.,;:!?-–—'\"()[]"
 
@@ -83,15 +112,21 @@ def dispatch(payload: Optional[str]) -> str:
     ``.pdf`` -> PDF path, else image path) extended to the four transcript
     payload kinds of BASELINE.json's input_hint.
     """
-    s = payload or ""
+    return _dispatch(payload or "")[0]
+
+
+def _dispatch(s: str):
+    """``(method, tagged regions)``.  The markup test finds the tagged
+    regions, so ``extract_turn_raw`` hands them on to ``extract_markup``."""
     stripped = s.lstrip()
     if stripped.startswith("{") and '"blocks"' in s:
-        return METHOD_PDF_TEXT
-    if _MARKUP_FENCE_RE.search(s) or _MARKUP_TAG_RE.search(s):
-        return METHOD_MARKUP
+        return METHOD_PDF_TEXT, None
+    tag_regions = _markup_tag_regions(s) if "</" in s else []
+    if tag_regions or _MARKUP_FENCE_RE.search(s):
+        return METHOD_MARKUP, tag_regions
     if _HTML_HINT_RE.search(s):
-        return METHOD_HTML
-    return METHOD_PLAIN
+        return METHOD_HTML, None
+    return METHOD_PLAIN, None
 
 
 def _token_score(token: str) -> float:
@@ -154,11 +189,6 @@ def _expand_span(payload: str, start: int, end: int) -> (int, int):
     return lo, hi
 
 
-def _line_of(payload: str, offset: int) -> int:
-    """Layout Y ordinate: the line number of a source offset."""
-    return payload.count("\n", 0, offset)
-
-
 def _make_block(start: int, end: int, y: int, text: str, confidence: float):
     """Internal block record: a flat (start, end, y, text, confidence)
     tuple.  The dict shape of the public contract (span struct + text +
@@ -184,6 +214,47 @@ def _block_dict(b) -> Dict:
 # ---------------------------------------------------------------------------
 
 def extract_html(payload: str) -> List[Dict]:
+    blocks = _html_blocks(payload, _TAG_SCAN_RE.finditer(payload))
+    if blocks is None:  # a dead-end run held a quote: scan tags exactly
+        blocks = _html_blocks(payload, _exact_tags(payload))
+    return blocks
+
+
+def _exact_tags(payload: str):
+    """Yield each tag of ``payload`` in ``finditer`` order, in O(n log n).
+
+    The attribute scan of a "<name" meets nothing but ">", '"' and "'"
+    ("stops") that can change its course, so where it ends depends only on
+    the first stop after the "<".  ``close[i]`` is the ">" that ends a scan
+    arriving at ``stops[i]`` outside quotes, or -1 where it cannot end:
+    a ">" ends it; a quote jumps to the next same quote and continues at
+    the stop after that.  One right-to-left pass fills the table, and each
+    "<name" then costs a bisect plus a bounded match of its own tag."""
+    stops = [m.start() for m in _TAG_STOP_RE.finditer(payload)]
+    close = [-1] * (len(stops) + 1)
+    next_quote = {'"': -1, "'": -1}
+    for i in range(len(stops) - 1, -1, -1):
+        ch = payload[stops[i]]
+        if ch == ">":
+            close[i] = stops[i]
+        else:
+            j = next_quote[ch]
+            if j >= 0:
+                close[i] = close[j + 1]
+            next_quote[ch] = i
+    pos = 0
+    for m in _TAG_START_RE.finditer(payload):
+        start = m.start()
+        if start >= pos:
+            end = close[bisect_left(stops, start)]
+            if end >= 0:
+                yield _TAG_SCAN_RE.match(payload, start, end + 1)
+                pos = end + 1
+
+
+def _html_blocks(payload: str, tags) -> Optional[List[Dict]]:
+    """The HTML blocks of ``payload`` given its ``_TAG_SCAN_RE`` matches;
+    None if a dead-end run holds a quote (see ``_TAG_SCAN_RE``)."""
     blocks: List[Dict] = []
     # Current-block accumulator state.
     cur_parts: List[str] = []       # decoded text runs
@@ -194,9 +265,14 @@ def extract_html(payload: str) -> List[Dict]:
     cur_tag_count = 0               # inline tags seen inside the block
     link_depth = 0
     skip_depth = 0                  # inside <script>/<style>/...
+    # Layout Y of offset line_pos.  Blocks flush in source order, so each
+    # newline is counted once.
+    line_pos = 0
+    line_no = 0
 
     def flush() -> None:
         nonlocal cur_parts, cur_start, cur_end, cur_link_chars, cur_text_chars, cur_tag_count
+        nonlocal line_pos, line_no
         if not cur_parts:  # nothing accumulated: only the tag counter can
             cur_tag_count = 0  # be non-zero — reset it and skip the join
             return
@@ -223,9 +299,10 @@ def extract_html(payload: str) -> List[Dict]:
                     tscores = [_token_score(t) for t in tokens]
                     if sum(tscores) / len(tscores) >= BOX_THRESH:  # D5 score filter
                         lo, hi = _expand_span(payload, cur_start, cur_end)  # D6/D7
-                        y = _line_of(payload, cur_start)
+                        line_no += payload.count("\n", line_pos, cur_start)
+                        line_pos = cur_start
                         blocks.append(
-                            _make_block(lo, hi, y, raw, min(tscores))
+                            _make_block(lo, hi, line_no, raw, min(tscores))
                         )
         cur_parts = []
         cur_start = -1
@@ -235,7 +312,12 @@ def extract_html(payload: str) -> List[Dict]:
         cur_tag_count = 0
 
     pos = 0
-    for m in _TAG_RE.finditer(payload):
+    for m in tags:
+        closing, name, attrs, gt = m.groups()
+        if not gt:  # dead-end run: text, unless it holds a quote
+            if '"' in attrs or "'" in attrs:
+                return None
+            continue
         text_run = payload[pos : m.start()]
         if text_run and skip_depth == 0:
             # unescape only when an entity can exist — value-identical
@@ -251,12 +333,12 @@ def extract_html(payload: str) -> List[Dict]:
             cur_text_chars += stripped_len
             if link_depth > 0:
                 cur_link_chars += stripped_len
-        closing, name, _attrs, self_close = m.groups()
         name = name.lower()
         if name in _SKIP_CONTENT_TAGS:
+            # "<script/>" opens a region too: its "/" is an attribute
             if closing:
                 skip_depth = max(0, skip_depth - 1)
-            elif not self_close:
+            else:
                 skip_depth += 1
         elif name in _BLOCK_TAGS:
             # inlined empty-flush guard: block tags outnumber text blocks
@@ -338,21 +420,54 @@ def extract_pdf_text(payload: str) -> Optional[List[Dict]]:
 # tagged regions; trusted content, confidence 1.0 (the text-layer analog).
 # ---------------------------------------------------------------------------
 
-def extract_markup(payload: str) -> List[Dict]:
+def _markup_tag_regions(payload: str) -> List[tuple]:
+    """``(start, end)`` of the content of each tagged region, in the
+    order ``finditer`` meets them.
+
+    A region's close tag is the first one after its open tag with the same
+    name.  The pattern's backreference compares names by lowercase under
+    IGNORECASE, so the close tags are indexed by ``str.lower`` of their
+    name (equal for the characters these names match, "ſ" included).  Each
+    open tag then costs one bisect, and each character is scanned twice."""
+    closes: Dict[str, List[int]] = {}
+    for m in _MARKUP_CLOSE_RE.finditer(payload):
+        closes.setdefault(m.group(1).lower(), []).append(m.start())
     regions = []
-    for m in _MARKUP_FENCE_RE.finditer(payload):
-        regions.append((m.start(1), m.group(1)))
-    for m in _MARKUP_TAG_RE.finditer(payload):
-        regions.append((m.start(2), m.group(2)))
+    if closes:
+        pos = 0
+        for m in _MARKUP_OPEN_RE.finditer(payload):
+            starts = closes.get(m.group(1).lower())
+            if starts and m.start() >= pos:
+                i = bisect_left(starts, m.end())
+                if i < len(starts):
+                    regions.append((m.end(), starts[i]))
+                    pos = starts[i] + len(m.group(1)) + 3  # past "</name>"
+    return regions
+
+
+def extract_markup(payload: str, tag_regions: Optional[List[tuple]] = None) -> List[Dict]:
+    """Blocks of the fenced and tagged regions.  ``tag_regions`` is
+    ``_markup_tag_regions(payload)`` when the caller has found it already."""
+    regions = [m.span(1) for m in _MARKUP_FENCE_RE.finditer(payload)]
+    regions += _markup_tag_regions(payload) if tag_regions is None else tag_regions
     regions.sort(key=lambda r: r[0])
     out: List[Dict] = []
-    for start, content in regions:
+    # Layout Y of offset line_pos, counted forward only.  lo never steps
+    # back, even where a fence and a tagged region nest: a later region's
+    # content starts after its own open tag, and an open tag ("```", ">")
+    # cannot sit in the leading whitespace that an earlier region skips.
+    line_pos = 0
+    line_no = 0
+    for start, end in regions:
+        content = payload[start:end]
         text = content.strip()
         if not text:  # blank skip
             continue
         lead = len(content) - len(content.lstrip())
         lo = start + lead
-        out.append(_make_block(lo, lo + len(text), _line_of(payload, lo), text, 1.0))
+        line_no += payload.count("\n", line_pos, lo)
+        line_pos = lo
+        out.append(_make_block(lo, lo + len(text), line_no, text, 1.0))
     return out
 
 
@@ -385,7 +500,7 @@ def extract_turn_raw(payload: Optional[str], force_ocr: bool = False):
     text-layer parse and run the heuristic path instead.
     """
     s = payload or ""
-    method = dispatch(s)
+    method, tag_regions = _dispatch(s)
     if method == METHOD_PDF_TEXT:
         parsed = None if force_ocr else extract_pdf_text(s)
         if parsed is None:
@@ -396,7 +511,7 @@ def extract_turn_raw(payload: Optional[str], force_ocr: bool = False):
         else:
             blocks = parsed
     elif method == METHOD_MARKUP:
-        blocks = extract_markup(s)
+        blocks = extract_markup(s, tag_regions)
     elif method == METHOD_HTML:
         blocks = extract_html(s)
     else:

@@ -293,3 +293,32 @@ def write_transcripts_parquet(path: str, n_convs: int = 100,
     table = pa.Table.from_pandas(df, schema=schema, preserve_index=False)
     pq.write_table(table, path)
     return path
+
+
+# Worst-case shapes for the per-turn kernel: unclosed tags, quote soups
+# and payloads with many blocks or regions.  Each unit repeats until the
+# payload is about ``size`` characters, so one shape at two sizes shows
+# how kernel time grows with payload size.
+_ADVERSARIAL_UNITS = {
+    "unclosed_tags": ("<html><p>", "<a x", ""),
+    "unclosed_then_quote": ("", "<a x", '">'),
+    "quote_soup": ("", "<a \"<b '", '"'),
+    "many_blocks": ("<html><body>\n", "<p>extraction pipeline turn transcript agent</p>\n", ""),
+    "unclosed_output": ("", "<output>", ""),
+    "many_output_regions": ("", "<output>\nscan filter join window\n</output>\n", ""),
+    "many_fences": ("", "```text\nstream row key value hash\n```\n", ""),
+    "script_self_close": ("<p>visible text before the script tag here</p><script/>",
+                          "<p>hidden text inside the open script region</p>\n", ""),
+    "mixed_quote_attrs": ("<div>", "<a href=\"x'y\" t='q\"r'>link text</a> plain words <b ", "</div>"),
+    "case_folded_markup": ("", "<OUTPUT>\nfirst\n</output><ſtdout>\nlong s\n</stdout><Stderr>x</STDERR>\n", ""),
+    "nested_markup": ("", "<output>\n   \n```\ninner fence\n```\n</output>\n", ""),
+}
+
+
+def adversarial_payloads(size: int) -> Dict[str, str]:
+    """Adversarial payloads of about ``size`` characters, keyed by shape."""
+    out = {}
+    for name, (head, unit, tail) in _ADVERSARIAL_UNITS.items():
+        n = max(1, (size - len(head) - len(tail)) // len(unit))
+        out[name] = head + unit * n + tail
+    return out
