@@ -561,8 +561,9 @@ def run_pipeline(
 def _invalidate_inconsistent(out_dir: str, src_snapshot_id: int) -> None:
     """Resume must not trust manifest PRESENCE alone (ADVICE r5): a
     committed stage is reusable only if its recorded chain still holds —
-    same snapshot and pipeline version as the requested run, and its
-    ``upstream_digest`` equal to the previous stage's ``digest_sum``.
+    same snapshot, extractor version and pipeline version as the
+    requested run, and its ``upstream_digest`` equal to the previous
+    stage's ``digest_sum``.
     The first stage that fails the check (or any stage committed after
     a missing one — unverifiable orphans) has its manifest removed, so
     ``run_pipeline`` recomputes from there instead of silently reusing
@@ -576,6 +577,7 @@ def _invalidate_inconsistent(out_dir: str, src_snapshot_id: int) -> None:
             break
         if (
             m.get("src_snapshot_id") != src_snapshot_id
+            or m.get("extractor_version") != core.EXTRACTOR_VERSION
             or m.get("pipeline_version") != PIPELINE_VERSION
             or m.get("upstream_digest") != prev_digest
         ):

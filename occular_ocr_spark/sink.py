@@ -7,20 +7,30 @@ North-rule requirements implemented here:
   count, per-method counts, and distinct-conversation count in a
   manifest entry; the rows themselves carry the lineage columns
   (``job.EXTRACTED_SCHEMA``).
-* **resumable from checkpoint** — the write unit is a *range of
-  conv_id-hash buckets* (one Spark job per range).  A manifest entry is
-  committed (atomic rename) only after its range's job finishes, so a
-  killed job resumes by re-running exactly the uncommitted ranges.
+* **resumable from checkpoint** — the manifest and lineage unit is a
+  *range of conv_id-hash buckets*.  One call runs ONE Spark job over
+  every pending range at once; after that job's atomic commit, one
+  manifest entry per range is committed (atomic rename), in range
+  order.  A kill before the job commits leaves every pending range
+  uncommitted, and a kill between manifest commits leaves exactly the
+  uncommitted ranges, so the next call re-runs only those.
+  ``max_ranges`` bounds the work of one call (time-sliced incremental
+  runs).
+* **lineage-checked skip** — a range counts as done only when its
+  manifest records this call's ``src_snapshot_id`` and
+  ``extractor_version``; any other range is pending and its buckets are
+  recomputed (lineage-based recompute, *Discretized Streams*).
 * **idempotent re-run** — data is laid out ``data/part_bucket=K/`` and
   written with dynamic partition overwrite, so re-running a range
   *replaces* its buckets instead of appending.  Because ``part_bucket``
   is a pure function of ``conv_id`` and ``(conv_id, turn_idx)`` is
   unique in the input, overwrite-by-bucket is equivalent to a MERGE
   keyed on ``(conv_id, turn_idx)`` — the Iceberg ``MERGE INTO`` this
-  stands in for (see :class:`IcebergSink`).
+  stands in for (see :class:`IcebergSink`).  The write is rebalanced on
+  ``part_bucket``, so each bucket is one file per job.
 
 On a real cluster the same layout maps 1:1 onto an Iceberg table
-partitioned by ``bucket(conv_id, N)``: the per-range scan becomes a
+partitioned by ``bucket(conv_id, N)``: the pending-range filter becomes a
 partition-pruned snapshot read (pinned ``src_snapshot_id``) and the
 overwrite becomes ``MERGE INTO``/``overwritePartitions``.  The Iceberg
 runtime jar is not present in this sandbox, so :class:`IcebergSink`
@@ -44,6 +54,13 @@ from .job import extract_detailed
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
+# manifest metric -> the method it counts
+_METHOD_METRICS = {
+    "n_html": core.METHOD_HTML,
+    "n_pdf": core.METHOD_PDF_TEXT,
+    "n_markup": core.METHOD_MARKUP,
+    "n_plain": core.METHOD_PLAIN,
+}
 
 
 def _bucket_col(num_buckets: int):
@@ -105,55 +122,86 @@ class CheckpointedParquetSink:
         force_ocr: bool = False,
         strategy: Optional[str] = None,
     ) -> List[dict]:
-        """Extract + write all not-yet-committed ranges; returns the manifest
-        entries committed by THIS call.  ``max_ranges`` bounds how many
-        ranges run (time-sliced incremental runs / fault-injection tests);
-        a later call with the same ``out_dir`` resumes where this left off.
+        """Extract + write every pending range in one Spark job; returns
+        the manifest entries committed by THIS call, in range order.
+
+        A range is pending unless its manifest records this call's
+        ``src_snapshot_id`` and ``extractor_version``.  ``max_ranges``
+        caps how many pending ranges this call runs (time-sliced
+        incremental runs / fault-injection tests); a later call with the
+        same ``out_dir`` resumes where this left off.  The range stays
+        the manifest and lineage unit: the job's output is committed
+        first, then one manifest per range.
         """
-        done = load_manifest(self.out_dir)
-        committed: List[dict] = []
+        snap = -1 if src_snapshot_id is None else int(src_snapshot_id)
+        ranges = _ranges(self.num_buckets, self.num_ranges)
+        done = {
+            r
+            for r, e in load_manifest(self.out_dir).items()
+            if e.get("src_snapshot_id") == snap
+            and e.get("extractor_version") == core.EXTRACTOR_VERSION
+        }
+        pending = [r for r in range(len(ranges)) if r not in done][:max_ranges]
+        if not pending:
+            return []
+        step = ranges[0][1] - ranges[0][0] + 1
+
+        def range_of(b):  # range_id = bucket // step
+            return (b / step).cast("int")
+
         bucket = _bucket_col(self.num_buckets)
-        for range_id, (lo, hi) in enumerate(_ranges(self.num_buckets, self.num_ranges)):
-            if range_id in done:
-                continue
-            if max_ranges is not None and len(committed) >= max_ranges:
-                break
-            part = transcripts.where(bucket.between(lo, hi))
-            ext = extract_detailed(
-                part,
-                force_ocr=force_ocr,
-                src_snapshot_id=src_snapshot_id,
-                num_partitions=num_partitions,
-                salt_buckets=salt_buckets,
-                strategy=strategy,
-            )
-            obs = Observation(f"range-{range_id}")
-            ext = ext.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_rows"),
+        if len(pending) < len(ranges):
+            transcripts = transcripts.where(range_of(bucket).isin(pending))
+        ext = extract_detailed(
+            transcripts,
+            force_ocr=force_ocr,
+            src_snapshot_id=src_snapshot_id,
+            num_partitions=num_partitions,
+            salt_buckets=salt_buckets,
+            strategy=strategy,
+        ).withColumn("part_bucket", bucket)
+        # the per-range metrics, as conditional aggregates of one observe
+        range_id = range_of(F.col("part_bucket"))
+        aggs = []
+        for r in pending:
+            in_r = range_id == r
+            aggs += [
+                F.sum(in_r.cast("long")).alias(f"n_rows_{r}"),
                 # Observation forbids DISTINCT aggregates; the HLL sketch is
                 # also the right answer at 10^12 rows.
-                F.approx_count_distinct(F.col("conv_id")).alias("n_convs"),
-                F.sum((F.col("method") == core.METHOD_HTML).cast("long")).alias("n_html"),
-                F.sum((F.col("method") == core.METHOD_PDF_TEXT).cast("long")).alias("n_pdf"),
-                F.sum((F.col("method") == core.METHOD_MARKUP).cast("long")).alias("n_markup"),
-                F.sum((F.col("method") == core.METHOD_PLAIN).cast("long")).alias("n_plain"),
-            )
-            out = ext.withColumn("part_bucket", _bucket_col(self.num_buckets))
-            (
-                out.write.option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .partitionBy("part_bucket")
-                .parquet(self.data_dir)
-            )
-            metrics = {k: (0 if v is None else int(v)) for k, v in obs.get.items()}
+                F.approx_count_distinct(F.when(in_r, F.col("conv_id"))).alias(f"n_convs_{r}"),
+            ] + [
+                F.sum((in_r & (F.col("method") == m)).cast("long")).alias(f"{k}_{r}")
+                for k, m in _METHOD_METRICS.items()
+            ]
+        obs = Observation("sink")
+        (
+            # each bucket lands in one shuffle partition, so one file per
+            # bucket per job; AQE can still split a hot bucket
+            ext.hint("rebalance", "part_bucket")
+            # observed above the exchange: AQE replaces an empty shuffle
+            # stage, and any metrics collected inside it, by an empty
+            # relation
+            .observe(obs, *aggs)
+            .write.option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .partitionBy("part_bucket")
+            .parquet(self.data_dir)
+        )
+        got = obs.get
+        committed: List[dict] = []
+        for r in pending:
+            lo, hi = ranges[r]
             entry = {
-                "range_id": range_id,
+                "range_id": r,
                 "bucket_lo": lo,
                 "bucket_hi": hi,
-                "src_snapshot_id": -1 if src_snapshot_id is None else int(src_snapshot_id),
+                "src_snapshot_id": snap,
                 "extractor_version": core.EXTRACTOR_VERSION,
-                "metrics": metrics,
+                "metrics": {
+                    k: int(got.get(f"{k}_{r}") or 0)
+                    for k in ("n_rows", "n_convs", *_METHOD_METRICS)
+                },
             }
             _commit(self.out_dir, entry)
             committed.append(entry)

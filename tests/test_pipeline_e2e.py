@@ -195,3 +195,29 @@ def test_resume_rejects_inconsistent_manifest_chain(spark, tmp_path):
     full = P.manifests(out_dir)
     assert set(full) == set(P.STAGES)
     assert all(m["src_snapshot_id"] == 2 for m in full.values())
+
+
+def test_resume_rejects_other_extractor_version(spark, tmp_path, monkeypatch):
+    """An extractor upgrade invalidates the chain from stage 1: stage
+    manifests built by another ``EXTRACTOR_VERSION`` are not reused, and
+    the re-run recommits stage 1 and every sink range under the new
+    version."""
+    from occular_ocr_spark.extraction import core
+
+    out_dir = str(tmp_path / "version")
+    sink_dir = os.path.join(P._stage_dir(out_dir, "extract"), "sink")
+    P.run_pipeline(spark, SF, out_dir, stop_after="quality")
+    P._invalidate_inconsistent(out_dir, src_snapshot_id=1)
+    assert set(P.manifests(out_dir)) == {"extract", "quality"}
+
+    monkeypatch.setattr(core, "EXTRACTOR_VERSION", "occular-ocr-spark/bumped")
+    P._invalidate_inconsistent(out_dir, src_snapshot_id=1)
+    assert P.manifests(out_dir) == {}
+
+    P.run_pipeline(spark, SF, out_dir, stop_after="extract")
+    assert P.stage_manifest(out_dir, "extract")["extractor_version"] == (
+        "occular-ocr-spark/bumped"
+    )
+    ranges = load_manifest(sink_dir)
+    assert len(ranges) == 4
+    assert {e["extractor_version"] for e in ranges.values()} == {"occular-ocr-spark/bumped"}

@@ -7,7 +7,10 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
+from occular_ocr_spark import sink as sink_mod
+from occular_ocr_spark.extraction import core
 from occular_ocr_spark.fixtures import transcripts_pandas
 from occular_ocr_spark.sink import CheckpointedParquetSink, IcebergSink, load_manifest
 
@@ -106,6 +109,124 @@ def test_manifest_lineage_and_metrics(spark, transcripts, tmp_path):
         b for e in entries for b in range(e["bucket_lo"], e["bucket_hi"] + 1)
     )
     assert covered == list(range(N_BUCKETS))
+
+
+def test_one_file_per_bucket_and_exact_range_metrics(spark, transcripts, tmp_path):
+    """The bucket-aligned write leaves one parquet file per non-empty
+    bucket, and each range's manifest counts equal an exact recount of
+    the rows read back (``n_convs`` within HLL error)."""
+    sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
+    entries = sink.write(transcripts, src_snapshot_id=3)
+    assert [e["range_id"] for e in entries] == list(range(N_RANGES))
+
+    bucket_dirs = [d for d in os.listdir(sink.data_dir) if d.startswith("part_bucket=")]
+    assert bucket_dirs
+    for d in bucket_dirs:
+        files = [f for f in os.listdir(os.path.join(sink.data_dir, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+
+    step = N_BUCKETS // N_RANGES
+    exact = {
+        r["range_id"]: r
+        for r in sink.read(spark)
+        .groupBy((F.col("part_bucket") / step).cast("int").alias("range_id"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.countDistinct("conv_id").alias("n_convs"),
+            *[
+                F.sum((F.col("method") == m).cast("long")).alias(k)
+                for k, m in sink_mod._METHOD_METRICS.items()
+            ],
+        )
+        .collect()
+    }
+    for e in entries:
+        m, want = e["metrics"], exact.get(e["range_id"])
+        if want is None:
+            assert m["n_rows"] == 0
+            continue
+        for k in ("n_rows", *sink_mod._METHOD_METRICS):
+            assert m[k] == want[k], (e["range_id"], k)
+        assert abs(m["n_convs"] - want["n_convs"]) <= max(1, 0.1 * want["n_convs"])
+
+
+def test_pending_ranges_without_rows_commit_zero_metrics(spark, transcripts, tmp_path):
+    """Pending ranges that get no input row still run, commit, and
+    record zero counts: an empty input, then ranges one at a time."""
+    sink = CheckpointedParquetSink(str(tmp_path / "empty"), N_BUCKETS, N_RANGES)
+    entries = sink.write(transcripts.limit(0), src_snapshot_id=6)
+    assert [e["range_id"] for e in entries] == list(range(N_RANGES))
+    assert all(set(e["metrics"].values()) == {0} for e in entries)
+
+    one_conv = transcripts.where(F.col("conv_id") == transcripts.first()["conv_id"])
+    sink = CheckpointedParquetSink(str(tmp_path / "one"), N_BUCKETS, N_RANGES)
+    rows = [sink.write(one_conv, src_snapshot_id=6, max_ranges=1)[0]["metrics"]["n_rows"]
+            for _ in range(N_RANGES)]
+    assert sink.is_complete()
+    assert sorted(rows)[:-1] == [0] * (N_RANGES - 1) and sum(rows) == one_conv.count()
+
+
+def test_crash_during_multi_range_commit(spark, transcripts, tmp_path_factory, monkeypatch):
+    """A kill after the job committed its data and after the first of
+    four manifest commits: the re-run commits only the missing ranges
+    and its rows equal a clean write, with no duplicate key."""
+    out_dir = str(tmp_path_factory.mktemp("crashed"))
+    sink = CheckpointedParquetSink(out_dir, N_BUCKETS, N_RANGES)
+    real_commit = sink_mod._commit
+
+    def commit_once(target, entry):
+        if load_manifest(target):
+            raise RuntimeError("killed during manifest commit")
+        real_commit(target, entry)
+
+    monkeypatch.setattr(sink_mod, "_commit", commit_once)
+    with pytest.raises(RuntimeError, match="killed"):
+        sink.write(transcripts, src_snapshot_id=5)
+    monkeypatch.setattr(sink_mod, "_commit", real_commit)
+    assert list(load_manifest(out_dir)) == [0]
+
+    resumed = sink.write(transcripts, src_snapshot_id=5)
+    assert [e["range_id"] for e in resumed] == list(range(1, N_RANGES))
+    assert sink.is_complete()
+    rows = _rows(spark, sink)
+    keys = [(r[0], r[1]) for r in rows]
+    assert len(keys) == len(set(keys)), "duplicate (conv_id, turn_idx) after resume"
+    clean = CheckpointedParquetSink(str(tmp_path_factory.mktemp("clean")), N_BUCKETS, N_RANGES)
+    clean.write(transcripts, src_snapshot_id=5)
+    assert rows == _rows(spark, clean)
+
+
+def test_snapshot_change_recomputes_every_range(spark, transcripts, tmp_path):
+    """Lineage-checked skip: manifests of snapshot 1 are not reused by a
+    snapshot-2 write whose payloads differ for the same keys, so no
+    snapshot-1 text or snapshot id survives in the read-back."""
+    snap2 = transcripts.withColumn(
+        "text", F.concat(F.lit("snapshot-2 turn "), F.col("turn_idx").cast("string"))
+    )
+    sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
+    sink.write(transcripts, src_snapshot_id=1)
+    assert {e["src_snapshot_id"] for e in load_manifest(str(tmp_path)).values()} == {1}
+
+    second = sink.write(snap2, src_snapshot_id=2)
+    assert [e["range_id"] for e in second] == list(range(N_RANGES))
+    assert {e["src_snapshot_id"] for e in load_manifest(str(tmp_path)).values()} == {2}
+    rows = _rows(spark, sink)
+    assert len(rows) == transcripts.count()
+    assert {r[4] for r in rows} == {2}
+    assert all(r[3].startswith("snapshot-2 turn ") for r in rows)
+
+
+def test_extractor_version_bump_recomputes_every_range(spark, transcripts, tmp_path, monkeypatch):
+    """Manifests written by another extractor version are not reused."""
+    sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
+    sink.write(transcripts, src_snapshot_id=4, max_ranges=2)
+    monkeypatch.setattr(core, "EXTRACTOR_VERSION", "occular-ocr-spark/bumped")
+    redone = sink.write(transcripts, src_snapshot_id=4)
+    assert [e["range_id"] for e in redone] == list(range(N_RANGES))
+    assert {e["extractor_version"] for e in load_manifest(str(tmp_path)).values()} == {
+        "occular-ocr-spark/bumped"
+    }
+    assert sink.write(transcripts, src_snapshot_id=4) == []
 
 
 def test_iceberg_sink_raises_without_runtime(spark):
