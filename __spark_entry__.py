@@ -14,10 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from occular_ocr_spark.queries import ORACLES, QUERIES, q_extract_transcripts
 
-# guarantee the composed-pipeline entry is registered even if queries.py's
-# guarded tail import skipped it (see the cycle note there)
-import occular_ocr_spark.pipeline_e2e  # noqa: E402,F401
-
 # The driver's hard correctness gate samples the FIRST 50 entries of the
 # dict returned by queries() (verified by the r3 judge: set equality with
 # insertion order).  Registration order used to be module import order,

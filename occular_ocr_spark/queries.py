@@ -21,6 +21,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .functions.multimodal import FEATURE_DIM
+from .pipeline_e2e import (
+    _LSH_BAND_CAP,
+    _MINHASH_BAND_ROWS,
+    _MINHASH_SEEDS,
+    _MINHASH_VERIFY_THRESH,
+    _minhash_candidates,
+    _shingles_of,
+    _synth_transcripts,
+    _verified_pairs,
+)
 
 _TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -771,35 +781,14 @@ GROUP BY md5(text)
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh): distinct 3-word shingles per document — the shared
-    blocking unit of the n-gram/minhash dedup family.  The explode is
-    map-side; `distinct` is the one shuffle."""
+    """(doc_id, sh): distinct 3-word shingles per document
+    (:func:`pipeline_e2e._shingles_of` over the documents table)."""
     # _spread before the explode/concat pyramid: every minhash/ngram
     # family query inherits this head, and it inherits the scan's
     # split count (1 task on the single-row-group fixture; no-op at
     # scale — guide §2.5).
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    toks = d.select("doc_id", F.split("text", " ").alias("l"))
-    return (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.when(
-                    F.size("l") >= 3, F.sequence(F.lit(1), F.size("l") - 2)
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("i"),
-            "l",
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                F.element_at("l", F.col("i")),
-                F.element_at("l", F.col("i") + 1),
-                F.element_at("l", F.col("i") + 2),
-            ).alias("sh"),
-        )
-        .distinct()
+    return _shingles_of(
+        _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     )
 
 
@@ -896,13 +885,6 @@ WHERE round(CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared), 6) >= 0.5
 """
 
 
-_MINHASH_SEEDS = 8
-_MINHASH_BAND_ROWS = 2
-# Hot-bucket cap: a (band, band_key) bucket larger than this is dropped
-# from candidate generation (degenerate collisions, not near-dups)
-_LSH_BAND_CAP = 100
-
-
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH banding: shingle → minhash signature → band buckets
     → candidate pairs.
@@ -917,76 +899,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is linear in the number of true near-dup pairs.
     """
     return _minhash_candidates(_shingles(spark, sf_dir))
-
-
-def _minhash_bands(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) LSH band rows over a (doc_id, sh)
-    shingle table — shared by `_minhash_candidates` and the
-    `lsh_band_load` capacity report."""
-    # All K minhashes in ONE partial-aggregated pass: K min() aggregates
-    # over the shingle rows — versus a broadcast crossJoin with the seed
-    # table, which would push K copies of every shingle through the
-    # shuffle.  At 100 TB the shuffle volume difference is the whole game.
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat_ws(":", F.lit(k), F.col("sh")))).alias(f"mh{k}")
-            for k in range(_MINHASH_SEEDS)
-        ]
-    )
-    n_bands = _MINHASH_SEEDS // _MINHASH_BAND_ROWS
-    band_struct = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"mh{b * _MINHASH_BAND_ROWS + r}")
-                        for r in range(_MINHASH_BAND_ROWS)
-                    ],
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sig.select(
-        "doc_id", F.explode(band_struct).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-
-
-def _minhash_candidates(sh: DataFrame) -> DataFrame:
-    """(doc_a, doc_b) candidate pairs from minhash-LSH banding over a
-    (doc_id, sh) shingle table."""
-    bands = _minhash_bands(sh)
-    # ONE groupBy(band, band_key) caps hot buckets AND materializes the
-    # doc-list; pairs expand inside the array (bounded by cap²/2 per
-    # bucket) — the same pattern as the ngram path's hot-shingle cap
-    # (q_dedup_ngram_jaccard).  Without the cap, one degenerate band key
-    # (e.g. near-empty docs hashing identically) puts a |bucket|² pair
-    # scan on a single task at corpus scale (VERDICT r2 #3); with it,
-    # per-bucket work is bounded and the former self-join's second
-    # full-band shuffle is gone too.
-    groups = (
-        bands.groupBy("band", "band_key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .where((F.size("docs") >= 2) & (F.size("docs") <= _LSH_BAND_CAP))
-    )
-    # docs is sorted ascending, so taking only later elements as partner
-    # yields each unordered pair once with doc_a < doc_b.
-    pair_structs = F.flatten(
-        F.transform(
-            "docs",
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + F.lit(2), F.size("docs")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    return (
-        groups.select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
 
 
 ORACLE_DEDUP_MINHASH_LSH = f"""
@@ -1018,9 +930,6 @@ FROM bands a JOIN bands b
 """
 
 
-_MINHASH_VERIFY_THRESH = 0.5
-
-
 def q_dedup_minhash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full two-stage production dedup pipeline: MinHash-LSH
     candidate generation -> EXACT shingle-Jaccard verification -> keep
@@ -1050,38 +959,7 @@ def q_dedup_minhash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit = _PAIRS_MEMO.get(key)
     if hit is not None:
         return hit
-    sh = _shingles(spark, sf_dir)
-    cands = _minhash_candidates(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    # candidate pairs and per-doc sizes are DATA-SCALED sides — no
-    # broadcast hints; AQE broadcasts them when they are actually small
-    # and falls back to shuffled joins when they are not (the docstring's
-    # "if candidates ever outgrew broadcast" degradation is now real,
-    # not aspirational — a forced hint OOMed the sf1 sweep's driver)
-    a_sh = sh.join(cands, sh.doc_id == cands.doc_a).select(
-        "doc_a", "doc_b", "sh"
-    )
-    b_sh = sh.select(F.col("doc_id").alias("doc_b_r"), F.col("sh").alias("sh_b"))
-    shared = (
-        a_sh.join(b_sh, (a_sh.sh == b_sh.sh_b) & (a_sh.doc_b == b_sh.doc_b_r))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    out = (
-        shared.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= _MINHASH_VERIFY_THRESH)
-        .select("doc_a", "doc_b", "jaccard")
-        .persist()
-    )
+    out = _verified_pairs(_shingles(spark, sf_dir)).persist()
     _PAIRS_MEMO[key] = out
     return out
 
@@ -2598,32 +2476,7 @@ def q_extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .job import extract_detailed
 
-    d = _t(spark, sf_dir, "documents")
-    payload = (
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(F.lit("<html><body><p>"), F.col("text"), F.lit("</p></body></html>")),
-        )
-        .when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(
-                F.lit('{"blocks": [{"type": 0, "lines": [{"bbox": [72, 100, 540, 112], '
-                      '"spans": [{"text": "'),
-                F.col("text"),
-                F.lit('"}]}]}]}'),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(F.lit("preamble\n```\n"), F.col("text"), F.lit("\n```")),
-        )
-        .otherwise(F.col("text"))
-    )
-    t = d.select(
-        F.concat(F.lit("conv-"), (F.col("doc_id") / 10).cast("bigint")).alias("conv_id"),
-        (F.col("doc_id") % 10).cast("int").alias("turn_idx"),
-        payload.alias("text"),
-    )
+    t = _synth_transcripts(_t(spark, sf_dir, "documents"))
     return extract_detailed(t, num_partitions=0, salt_buckets=4, src_snapshot_id=1).select(
         "conv_id", "turn_idx", "method", F.col("text").alias("extracted")
     )
@@ -3012,16 +2865,3 @@ from . import queries_weighted as _queries_weighted  # noqa: E402,F401
 from . import queries_aqp as _queries_aqp  # noqa: E402,F401
 from . import queries_resilience as _queries_resilience  # noqa: E402,F401
 from . import queries_robustscale_dist as _queries_robustscale_dist  # noqa: E402,F401
-# pipeline_e2e composes constants from queries_scale / queries_quality /
-# queries_pipeline, so importing it here closes a cycle when an EXECUTOR
-# python worker unpickles a UDF whose closure lives in one of those
-# modules (worker import order: queries_scale -> queries -> pipeline_e2e
-# -> queries_scale[partial]).  Workers never read the catalog dict, so
-# swallowing the ImportError there is safe; every DRIVER entry point
-# (__spark_entry__, bench, check_queries, the tests) re-imports
-# pipeline_e2e explicitly, which is an idempotent no-op when this import
-# succeeded and a clean late registration when it was skipped.
-try:
-    from . import pipeline_e2e as _pipeline_e2e  # noqa: E402,F401
-except ImportError:  # partially-initialized sibling during worker unpickle
-    pass

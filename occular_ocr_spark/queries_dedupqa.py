@@ -50,13 +50,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import queries as _q
-from .queries import (
+from .pipeline_e2e import (
     _LSH_BAND_CAP,
-    ORACLE_DEDUP_MINHASH_VERIFY,
     _MINHASH_BAND_ROWS,
     _MINHASH_SEEDS,
     _minhash_bands,
     _minhash_candidates,
+)
+from .queries import (
+    ORACLE_DEDUP_MINHASH_VERIFY,
     _shingles,
     _t,
     q_dedup_minhash_verify,

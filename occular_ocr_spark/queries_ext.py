@@ -28,17 +28,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import queries as _q
+from .pipeline_e2e import _min_label_components
 
 # ---------------------------------------------------------------------------
 # Dedup groups: connected components over verified near-dup pairs
 # ---------------------------------------------------------------------------
 
-_CC_MAX_ROUNDS = 12
-
 
 def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs -> canonical dedup groups: connected components by
-    iterative min-label propagation (the Pregel pattern).
+    iterative min-label propagation (the Pregel pattern,
+    :func:`pipeline_e2e._min_label_components`).
 
     The step every production dedup pipeline needs after candidate
     verification: near-dup PAIRS are not actionable until they become
@@ -46,65 +46,9 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH-verified pairs (:func:`queries.q_dedup_minhash_verify`);
     every document gets ``group_id`` = the smallest doc_id reachable
     from it (singletons map to themselves).
-
-    Each round is one shuffle join (labels x edges, keyed on the edge
-    source) plus one partial-aggregated min-groupBy; labels are
-    checkpointed per round so the plan never grows with iteration
-    count.  Rounds needed = component diameter — near-dup clusters are
-    shallow (a handful of hops), and the loop stops as soon as a round
-    changes nothing, with a hard cap as backstop.  At 100 TB the same
-    loop runs with a reliable checkpoint dir instead of
-    ``localCheckpoint`` and converges in O(log n) rounds with the
-    large-star/small-star variant; min-label is the s=1 special case.
     """
     pairs = _q.q_dedup_minhash_verify(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("src", "dst")
-        .persist()
-    )
-    labels = (
-        _q._t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").cast("bigint").alias("doc_id"))
-        .withColumn("lbl", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    # Monotone convergence metric: min-label never increases, so the
-    # label sum strictly decreases until the fixpoint (decimal: a
-    # corpus-scale sum of 64-bit ids overflows a long).
-    sum_expr = F.sum(F.col("lbl").cast("decimal(38,0)"))
-    prev_sum = labels.agg(sum_expr).collect()[0][0]
-    converged = False
-    # +1: a diameter-_CC_MAX_ROUNDS component needs that many changing
-    # rounds plus one no-change round to CONFIRM the fixpoint
-    for _ in range(_CC_MAX_ROUNDS + 1):
-        prop = labels.join(edges, labels.doc_id == edges.src).select(
-            F.col("dst").alias("doc_id"), F.col("lbl")
-        )
-        labels = (
-            labels.union(prop)
-            .groupBy("doc_id")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(sum_expr).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    if not converged:
-        # A component with diameter > _CC_MAX_ROUNDS would silently get
-        # split labels; near-dup clusters are shallow, so exhausting the
-        # cap means the input is not what this operator is for — fail
-        # loudly rather than return wrong group_ids (ADVICE r2).  The
-        # production swap for deep components is the large-star/
-        # small-star variant (O(log n) rounds).
-        raise RuntimeError(
-            f"dedup_groups: min-label propagation did not converge in "
-            f"{_CC_MAX_ROUNDS} rounds (component diameter exceeds the cap); "
-            "use the large-star/small-star variant for deep components"
-        )
+    labels = _min_label_components(_q._t(spark, sf_dir, "documents"), pairs)
     return labels.select("doc_id", F.col("lbl").alias("group_id"))
 
 

@@ -12,10 +12,40 @@ pattern as queries_ext).
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+from typing import Dict
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import queries as _q
 from . import queries_ext as _qe
+from .pipeline_e2e import (
+    N_SHARDS,
+    _DECON_BENCH_DOCS,
+    _DECON_MIN_OVERLAP,
+    _GR_ALPHA_DEN,
+    _GR_ALPHA_NUM,
+    _GR_MAX_WORDS,
+    _GR_MIN_STOP,
+    _GR_MIN_WORDS,
+    _GR_MWL_HI,
+    _GR_MWL_LO,
+    _GR_STOPWORDS,
+    _LSH_BAND_CAP,
+    _MINHASH_BAND_ROWS,
+    _MINHASH_SEEDS,
+    _MINHASH_VERIFY_THRESH,
+    _PACK_BLOCK,
+    _PACK_CAP,
+    _SEP,
+    _SPLIT_TRAIN_BUCKETS,
+    is_complete,
+    run_pipeline,
+    shard_manifest_df,
+)
 
 # ---------------------------------------------------------------------------
 # Dedup end product: keep one canonical doc per near-dup group
@@ -249,9 +279,6 @@ FROM n
 # ---------------------------------------------------------------------------
 # Decontamination: benchmark n-gram overlap scan
 # ---------------------------------------------------------------------------
-
-_DECON_BENCH_DOCS = 10   # docs 0..9 stand in for the held-out eval set
-_DECON_MIN_OVERLAP = 1   # >= this many shared shingles flags a doc
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -540,9 +567,6 @@ FROM w, t
 # ---------------------------------------------------------------------------
 # Sequence packing: concat-and-chunk assignment via distributed prefix sum
 # ---------------------------------------------------------------------------
-
-_PACK_CAP = 256       # tokens per packed training sequence
-_PACK_BLOCK = 64      # docs per prefix-sum block
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1028,6 +1052,193 @@ FROM agg
 """
 
 
+# ---------------------------------------------------------------------------
+# pipeline_e2e — the composed curation chain as a catalog entry
+# ---------------------------------------------------------------------------
+#
+# ``pipeline_e2e`` runs the product's whole chain
+# (:func:`pipeline_e2e.run_pipeline`, session-memoized per sf_dir) and
+# returns the per-(split, shard) manifest; its DuckDB oracle replays ALL
+# EIGHT stages as one WITH-chain (recursive CTE for the CC stage) — the
+# composition is value-hash-gated end to end.
+
+_E2E_MEMO: Dict[tuple, str] = {}
+
+
+@atexit.register
+def _cleanup_e2e_memo() -> None:
+    """Reclaim the memoized staged-artifact dirs at interpreter exit
+    (ADVICE r5: repeated bench/gate sessions leaked full 8-stage
+    pipeline copies under /tmp)."""
+    while _E2E_MEMO:
+        shutil.rmtree(_E2E_MEMO.popitem()[1], ignore_errors=True)
+
+
+def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Catalog gate for the composed chain: run all eight stages into a
+    session temp dir (memoized per sf_dir — the staged artifact is the
+    point, rebuilding it per downstream read is not) and return the
+    per-(split, shard) manifest."""
+    key = (_q._session_key(spark), os.path.abspath(sf_dir))
+    out_dir = _E2E_MEMO.get(key)
+    if out_dir is None or not is_complete(out_dir):
+        out_dir = out_dir or tempfile.mkdtemp(prefix="occ_e2e_")
+        run_pipeline(spark, sf_dir, out_dir)
+        _E2E_MEMO[key] = out_dir
+    return shard_manifest_df(spark, out_dir)
+
+
+_STOP_SQL = " + ".join(
+    f"CAST(list_contains(ws, '{s}') AS INT)" for s in _GR_STOPWORDS
+)
+
+# 3-word distinct shingles of an arbitrary (doc_id, text) relation
+_SH_SQL = """
+  SELECT DISTINCT doc_id,
+         list_extract(l, i) || ' ' || list_extract(l, i+1) || ' '
+           || list_extract(l, i+2) AS sh
+  FROM (SELECT doc_id, l, unnest(generate_series(1, len(l) - 2)) AS i
+        FROM (SELECT doc_id, string_split(text, ' ') AS l FROM {src})
+        WHERE len(l) >= 3)
+"""
+
+ORACLE_PIPELINE_E2E = f"""
+WITH RECURSIVE
+-- stage 1: extract (ORACLE_EXTRACT_TRANSCRIPTS keyed by doc_id)
+base AS (
+  SELECT doc_id, doc_id % 4 AS branch,
+         trim(regexp_replace(text, ' +', ' ', 'g')) AS raw
+  FROM documents),
+s1 AS (
+  SELECT doc_id,
+         CASE WHEN branch <> 0 THEN raw
+              WHEN length(raw) >= 38
+                   AND list_avg(list_transform(string_split(raw, ' '),
+                         t -> CAST(length(regexp_replace(t, '[^a-zA-Z0-9]', '', 'g'))
+                              AS DOUBLE) / length(t))) >= 0.52
+              THEN raw ELSE '' END AS text
+  FROM base),
+-- stage 2: per-doc Gopher gates on the extracted text
+q2 AS (
+  SELECT doc_id, text,
+         list_filter(string_split(text, ' '), w -> w <> '') AS ws
+  FROM s1 WHERE text <> ''),
+q2f AS (
+  SELECT doc_id, text,
+         CAST(len(ws) AS BIGINT) AS n,
+         CAST(coalesce(list_sum(list_transform(ws, w -> len(w))), 0) AS BIGINT)
+           AS sum_len,
+         CAST(len(list_filter(ws, w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT)
+           AS n_alpha,
+         CAST({_STOP_SQL} AS BIGINT) AS stop_hits
+  FROM q2),
+s2 AS (
+  SELECT doc_id, text FROM q2f
+  WHERE n >= {_GR_MIN_WORDS} AND n <= {_GR_MAX_WORDS}
+    AND {_GR_MWL_LO} * n <= sum_len AND sum_len <= {_GR_MWL_HI} * n
+    AND {_GR_ALPHA_DEN} * n_alpha >= {_GR_ALPHA_NUM} * n
+    AND stop_hits >= {_GR_MIN_STOP}),
+-- stage 3: exact dedup
+s3 AS (
+  SELECT doc_id, text FROM (
+    SELECT doc_id, text, min(doc_id) OVER (PARTITION BY md5(text)) AS keep
+    FROM s2) t
+  WHERE doc_id = keep),
+-- stage 4: minhash -> LSH -> exact verify -> CC -> keep canonical
+sh4 AS ({_SH_SQL.format(src="s3")}),
+seeds AS (SELECT unnest(generate_series(0, {_MINHASH_SEEDS - 1})) AS seed),
+sig AS (
+  SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || ':' || sh)) AS mh
+  FROM sh4 CROSS JOIN seeds GROUP BY doc_id, seed),
+bands_all AS (
+  SELECT doc_id, CAST(seed // {_MINHASH_BAND_ROWS} AS INT) AS band,
+         string_agg(mh, '|' ORDER BY seed) AS band_key
+  FROM sig GROUP BY doc_id, CAST(seed // {_MINHASH_BAND_ROWS} AS INT)),
+bands AS (
+  SELECT doc_id, band, band_key FROM (
+    SELECT doc_id, band, band_key,
+           count(*) OVER (PARTITION BY band, band_key) AS bf
+    FROM bands_all) t
+  WHERE bf <= {_LSH_BAND_CAP}),
+cands AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh4 GROUP BY doc_id),
+shared AS (
+  SELECT c.doc_a, c.doc_b, count(*) AS n_shared
+  FROM cands c
+  JOIN sh4 a ON a.doc_id = c.doc_a
+  JOIN sh4 b ON b.doc_id = c.doc_b AND b.sh = a.sh
+  GROUP BY c.doc_a, c.doc_b),
+pairs AS (
+  SELECT s.doc_a, s.doc_b FROM shared s
+  JOIN sizes sa ON sa.doc_id = s.doc_a
+  JOIN sizes sb ON sb.doc_id = s.doc_b
+  WHERE round(CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared), 6)
+        >= {_MINHASH_VERIFY_THRESH}),
+edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  UNION ALL
+  SELECT doc_b AS src, doc_a AS dst FROM pairs),
+reach AS (
+  SELECT CAST(doc_id AS BIGINT) AS node, CAST(doc_id AS BIGINT) AS lbl FROM s3
+  UNION
+  SELECT e.dst AS node, r.lbl
+  FROM reach r JOIN edges e ON e.src = r.node
+  WHERE r.lbl < e.dst),
+labels AS (SELECT node AS doc_id, min(lbl) AS group_id FROM reach GROUP BY node),
+s4 AS (
+  SELECT s3.doc_id, s3.text FROM s3
+  JOIN labels ON labels.doc_id = s3.doc_id AND labels.group_id = s3.doc_id),
+-- stage 5: decontaminate vs raw docs 0..9
+bench_docs AS (
+  SELECT doc_id, text FROM documents WHERE doc_id < {_DECON_BENCH_DOCS}),
+bench AS (SELECT DISTINCT sh FROM ({_SH_SQL.format(src="bench_docs")}) t),
+sh5 AS ({_SH_SQL.format(src="s4")}),
+contaminated AS (
+  SELECT sh5.doc_id FROM sh5 JOIN bench ON bench.sh = sh5.sh
+  GROUP BY sh5.doc_id HAVING count(*) >= {_DECON_MIN_OVERLAP}),
+s5 AS (
+  SELECT doc_id, text FROM s4
+  WHERE doc_id >= {_DECON_BENCH_DOCS}
+    AND doc_id NOT IN (SELECT doc_id FROM contaminated)),
+-- stage 6: conversation-aware md5-bucket split
+s6 AS (
+  SELECT doc_id, text,
+         CASE WHEN
+           (strpos('0123456789abcdef',
+                   substr(md5(CAST(doc_id // 10 AS VARCHAR)), 1, 1)) - 1) * 16
+           + (strpos('0123456789abcdef',
+                     substr(md5(CAST(doc_id // 10 AS VARCHAR)), 2, 1)) - 1)
+           < {_SPLIT_TRAIN_BUCKETS} THEN 'train' ELSE 'test' END AS split
+  FROM s5),
+-- stage 7: per-split packing (running token prefix in doc_id order)
+s7 AS (
+  SELECT doc_id, text, split, n_tok,
+         CAST(COALESCE(sum(n_tok) OVER (PARTITION BY split ORDER BY doc_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+              AS BIGINT) AS start
+  FROM (SELECT doc_id, text, split,
+               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+        FROM s6) t),
+-- stage 8: round-robin bins across shards; per-(split, shard) manifest
+s8 AS (
+  SELECT doc_id, text, split, n_tok,
+         start // {_PACK_CAP} AS bin_id,
+         (start // {_PACK_CAP}) % {N_SHARDS} AS shard_id
+  FROM s7)
+SELECT split, CAST(shard_id AS BIGINT) AS shard_id,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+       CAST(count(DISTINCT bin_id) AS BIGINT) AS n_bins,
+       CAST(sum(CAST(CAST('0x' || substr(md5(
+             CAST(doc_id AS VARCHAR) || '{_SEP}' || text), 1, 8) AS BIGINT)
+           AS BIGINT)) AS BIGINT) AS digest_sum
+FROM s8 GROUP BY 1, 2
+"""
+
+
 PIPELINE_QUERIES = {
     "dedup_keep_canonical": q_dedup_keep_canonical,
     "cc_largestar": q_cc_largestar,
@@ -1045,6 +1256,7 @@ PIPELINE_QUERIES = {
     "curation_funnel": q_curation_funnel,
     "label_propagation": q_label_propagation,
     "mixture_temperature": q_mixture_temperature,
+    "pipeline_e2e": q_pipeline_e2e,
 }
 
 PIPELINE_ORACLES = {
@@ -1064,6 +1276,7 @@ PIPELINE_ORACLES = {
     "curation_funnel": ORACLE_CURATION_FUNNEL,
     "label_propagation": ORACLE_LABEL_PROPAGATION,
     "mixture_temperature": ORACLE_MIXTURE_TEMPERATURE,
+    "pipeline_e2e": ORACLE_PIPELINE_E2E,
 }
 
 _q.QUERIES.update(PIPELINE_QUERIES)

@@ -38,22 +38,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import queries as _q
+from .pipeline_e2e import (
+    _GR_ALPHA_DEN,
+    _GR_ALPHA_NUM,
+    _GR_MAX_WORDS,
+    _GR_MIN_STOP,
+    _GR_MIN_WORDS,
+    _GR_MWL_HI,
+    _GR_MWL_LO,
+    _GR_STOPWORDS,
+)
 from .queries import _t
 from .queries_transcript import _ORACLE_TURNS, _turns
 
 # ---------------------------------------------------------------------------
 # gopher_rules
 # ---------------------------------------------------------------------------
-
-# Bounds follow the published Gopher rule SHAPE; the numeric values are
-# scaled to the synthetic fixture corpus (10-99 words/doc) so every rule
-# has live pass AND fail populations for the gate to pin.
-_GR_MIN_WORDS, _GR_MAX_WORDS = 20, 80  # Gopher: 50..100k
-_GR_MWL_LO, _GR_MWL_HI = 4, 10  # Gopher: mean word length 3..10
-_GR_ALPHA_NUM, _GR_ALPHA_DEN = 4, 5  # >= 80% words contain a letter
-_GR_STOPWORDS = ("the", "and", "of", "to", "in")
-_GR_MIN_STOP = 1  # Gopher: >= 2 distinct of 8; fixture vocab carries
-#                    at most one of the list, so the scaled gate is >= 1
 
 
 def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,11 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import queries as _q
+from .pipeline_e2e import _MINHASH_SEEDS, _minhash_candidates
 from .queries import (
     ORACLE_DEDUP_MINHASH_LSH,
     ORACLE_DEDUP_NGRAM_JACCARD,
-    _MINHASH_SEEDS,
-    _minhash_candidates,
     _shingles,
     _t,
 )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import queries as _q
 from . import queries_ext as _ext
+from .pipeline_e2e import _SPLIT_TRAIN_BUCKETS
 from .queries import _persist_tracked, _register_views, _t
 
 # ---------------------------------------------------------------------------
@@ -1372,8 +1373,6 @@ FROM sess GROUP BY conv_id, sid
 # ---------------------------------------------------------------------------
 # Group-aware train/test split
 # ---------------------------------------------------------------------------
-
-_SPLIT_TRAIN_BUCKETS = 204  # of 256 ≈ 80%
 
 
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,9 @@ North-rule requirements implemented here:
   recomputed (lineage-based recompute, *Discretized Streams*).
 * **idempotent re-run** — data is laid out ``data/part_bucket=K/`` and
   written with dynamic partition overwrite, so re-running a range
-  *replaces* its buckets instead of appending.  Because ``part_bucket``
+  *replaces* its buckets instead of appending; a pending range's old
+  buckets are removed before the job (manifest first), so a bucket the
+  new input leaves empty keeps no stale rows.  Because ``part_bucket``
   is a pure function of ``conv_id`` and ``(conv_id, turn_idx)`` is
   unique in the input, overwrite-by-bucket is equivalent to a MERGE
   keyed on ``(conv_id, turn_idx)`` — the Iceberg ``MERGE INTO`` this
@@ -44,6 +46,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 from typing import Dict, List, Optional, Tuple
 
@@ -87,14 +90,23 @@ def load_manifest(out_dir: str) -> Dict[int, dict]:
     return done
 
 
-def _commit(out_dir: str, entry: dict) -> None:
-    """Atomic manifest commit: tmp file + rename (the checkpoint barrier)."""
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Write ``obj`` as JSON to ``path`` by tmp file + rename: a reader
+    sees the old file or the new one, never a torn one."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
     with os.fdopen(fd, "w") as f:
-        json.dump(entry, f)
-    os.replace(tmp, os.path.join(mdir, f"range-{entry['range_id']:05d}.json"))
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _range_manifest_path(out_dir: str, range_id: int) -> str:
+    return os.path.join(out_dir, MANIFEST_DIR, f"range-{range_id:05d}.json")
+
+
+def _commit(out_dir: str, entry: dict) -> None:
+    """Atomic manifest commit (the checkpoint barrier)."""
+    os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
+    _write_json_atomic(_range_manifest_path(out_dir, entry["range_id"]), entry)
 
 
 class CheckpointedParquetSink:
@@ -144,6 +156,19 @@ class CheckpointedParquetSink:
         pending = [r for r in range(len(ranges)) if r not in done][:max_ranges]
         if not pending:
             return []
+        # a pending range's old buckets go before the job: dynamic
+        # overwrite replaces only the buckets it writes, so a bucket the
+        # new input leaves empty would keep stale rows.  The manifest goes
+        # first, so a kill in between leaves the range pending.
+        for r in pending:
+            p = _range_manifest_path(self.out_dir, r)
+            if os.path.exists(p):
+                os.remove(p)
+            lo, hi = ranges[r]
+            for b in range(lo, hi + 1):
+                shutil.rmtree(
+                    os.path.join(self.data_dir, f"part_bucket={b}"), ignore_errors=True
+                )
         step = ranges[0][1] - ranges[0][0] + 1
 
         def range_of(b):  # range_id = bucket // step

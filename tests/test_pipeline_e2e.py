@@ -221,3 +221,27 @@ def test_resume_rejects_other_extractor_version(spark, tmp_path, monkeypatch):
     ranges = load_manifest(sink_dir)
     assert len(ranges) == 4
     assert {e["extractor_version"] for e in ranges.values()} == {"occular-ocr-spark/bumped"}
+
+
+def test_min_label_components_releases_earlier_round_checkpoints(spark):
+    """After the CC loop returns, the only checkpoint it leaves in RDD
+    storage is its result's: every earlier round's is released."""
+    import time
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    before = stored()
+    # a path 0-1-2-3-4-5 needs five changing rounds; 6 and 7 are singletons
+    nodes = spark.range(8).toDF("doc_id")
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(5)], "doc_a long, doc_b long")
+    labels = P._min_label_components(nodes, pairs)
+    assert dict(labels.collect()) == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 0, 6: 6, 7: 7}
+
+    final = labels._jdf.queryExecution().analyzed().rdd().id()
+    deadline = time.time() + 30  # blocks are released asynchronously
+    while (left := stored() - before) != {final} and time.time() < deadline:
+        time.sleep(0.2)
+    assert left == {final}

@@ -216,6 +216,24 @@ def test_snapshot_change_recomputes_every_range(spark, transcripts, tmp_path):
     assert all(r[3].startswith("snapshot-2 turn ") for r in rows)
 
 
+def test_snapshot_change_drops_buckets_left_empty(spark, transcripts, tmp_path):
+    """A snapshot that drops every conversation of one bucket leaves no
+    stale rows there: the read-back equals the new snapshot exactly."""
+    bucket = sink_mod._bucket_col(N_BUCKETS)
+    gone = transcripts.select(bucket.alias("b")).first()["b"]
+    snap2 = transcripts.where(bucket != gone)
+    n_gone = transcripts.count() - snap2.count()
+    assert n_gone > 0
+
+    sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
+    sink.write(transcripts, src_snapshot_id=1)
+    sink.write(snap2, src_snapshot_id=2)
+    rows = _rows(spark, sink)
+    assert len(rows) == transcripts.count() - n_gone
+    assert {r[4] for r in rows} == {2}
+    assert gone not in {r[6] for r in rows}
+
+
 def test_extractor_version_bump_recomputes_every_range(spark, transcripts, tmp_path, monkeypatch):
     """Manifests written by another extractor version are not reused."""
     sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
