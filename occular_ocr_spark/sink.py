@@ -90,6 +90,17 @@ def load_manifest(out_dir: str) -> Dict[int, dict]:
     return done
 
 
+def _current_ranges(manifest: Dict[int, dict], snap: int) -> set:
+    """Range ids whose manifest records ``snap`` and the current
+    ``extractor_version``; every other range is pending."""
+    return {
+        r
+        for r, e in manifest.items()
+        if e.get("src_snapshot_id") == snap
+        and e.get("extractor_version") == core.EXTRACTOR_VERSION
+    }
+
+
 def _write_json_atomic(path: str, obj: dict) -> None:
     """Write ``obj`` as JSON to ``path`` by tmp file + rename: a reader
     sees the old file or the new one, never a torn one."""
@@ -147,12 +158,7 @@ class CheckpointedParquetSink:
         """
         snap = -1 if src_snapshot_id is None else int(src_snapshot_id)
         ranges = _ranges(self.num_buckets, self.num_ranges)
-        done = {
-            r
-            for r, e in load_manifest(self.out_dir).items()
-            if e.get("src_snapshot_id") == snap
-            and e.get("extractor_version") == core.EXTRACTOR_VERSION
-        }
+        done = _current_ranges(load_manifest(self.out_dir), snap)
         pending = [r for r in range(len(ranges)) if r not in done][:max_ranges]
         if not pending:
             return []
@@ -236,9 +242,15 @@ class CheckpointedParquetSink:
         return spark.read.parquet(self.data_dir)
 
     def is_complete(self) -> bool:
-        return len(load_manifest(self.out_dir)) == len(
-            _ranges(self.num_buckets, self.num_ranges)
-        )
+        """True when every range is done for one ``src_snapshot_id`` and
+        the current ``extractor_version``: the state in which ``write``
+        at that snapshot has nothing left to run."""
+        manifest = load_manifest(self.out_dir)
+        snaps = {e.get("src_snapshot_id") for e in manifest.values()}
+        if len(snaps) != 1:
+            return False
+        n = len(_ranges(self.num_buckets, self.num_ranges))
+        return set(range(n)) <= _current_ranges(manifest, snaps.pop())
 
 
 def iceberg_runtime_available(spark: SparkSession) -> bool:

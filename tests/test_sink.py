@@ -234,6 +234,21 @@ def test_snapshot_change_drops_buckets_left_empty(spark, transcripts, tmp_path):
     assert gone not in {r[6] for r in rows}
 
 
+def test_is_complete_checks_lineage(spark, transcripts, tmp_path, monkeypatch):
+    """A sink whose ranges record different snapshots, or another
+    extractor version, is not complete, though every range has a manifest."""
+    sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
+    sink.write(transcripts, src_snapshot_id=1)
+    assert sink.is_complete()
+    sink.write(transcripts, src_snapshot_id=2, max_ranges=2)
+    assert len(load_manifest(str(tmp_path))) == N_RANGES
+    assert not sink.is_complete()
+    sink.write(transcripts, src_snapshot_id=2)
+    assert sink.is_complete()
+    monkeypatch.setattr(core, "EXTRACTOR_VERSION", "occular-ocr-spark/bumped")
+    assert not sink.is_complete()
+
+
 def test_extractor_version_bump_recomputes_every_range(spark, transcripts, tmp_path, monkeypatch):
     """Manifests written by another extractor version are not reused."""
     sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
