@@ -14,12 +14,11 @@ the wall time of one ``importlib.invalidate_caches()`` call.  Re-run it
 after a Spark or Python upgrade to see whether the cost came back.
 
 Usage (from the repository root):
-    python scripts/worker_overhead.py [--n-convs 400]
+    python scripts/worker_overhead.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import statistics
@@ -73,10 +72,6 @@ def _measure(spark, tasks: int) -> dict:
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--n-convs", type=int, default=400)
-    args = ap.parse_args()
-
     # Spark's Python workers import the product from this checkout
     old = os.environ.get("PYTHONPATH")
     os.environ["PYTHONPATH"] = REPO + (os.pathsep + old if old else "")
@@ -96,7 +91,7 @@ def main() -> int:
         tasks = 4 * cpus
         print(json.dumps({"python": sys.version.split()[0], "cpus": cpus}))
         print(json.dumps({"phase": "before", **_measure(spark, tasks)}))
-        df = spark.createDataFrame(transcripts_pandas(n_convs=args.n_convs, seed=11))
+        df = spark.createDataFrame(transcripts_pandas(n_convs=400, seed=11))
         (extract_detailed(df, num_partitions=tasks, salt_buckets=8)
          .write.format("noop").mode("overwrite").save())
         print(json.dumps({"phase": "after_extract", **_measure(spark, tasks)}))
