@@ -691,15 +691,15 @@ def q_sparse_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = d.count()
     if n_docs == 0:
         return spark.createDataFrame([], "doc_id bigint, score double")
-    # cached: the query-term argmax below materializes this lineage and
-    # the returned scoring plan reuses it (dedup_groups/ivf house
-    # pattern) — without the cache the corpus is tokenized twice
-    postings = (
+    # persisted: the query-term argmax below materializes this lineage
+    # and the returned scoring plan reuses it (dedup_groups/ivf house
+    # pattern) — without the cache the corpus is tokenized twice.  The
+    # returned plan still reads it, so it is release-tracked.
+    postings = _persist_tracked(
         d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .where(F.col("tok") != "")
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
-        .cache()
     )
     df_counts = postings.groupBy("tok").agg(F.count("*").alias("df"))
     qterms = df_counts.orderBy(F.col("df").desc(), F.col("tok")).head(
@@ -790,10 +790,13 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symbol table is cached before its argmax materializes it, so the
     # corpus is tokenized once and round k+1 rewrites round k's CACHED
     # vocab rather than replaying the whole lineage from the raw scan
-    # (kmeans_lloyd/dedup_groups precedent).
+    # (kmeans_lloyd/dedup_groups precedent).  The result is a local
+    # frame built from the collected merges, so every cached table is
+    # released before returning.
     cur = vocab.select(
         F.trim(F.regexp_replace(F.col("tok"), "(.)", "$1 ")).alias("sym"), "cnt"
     ).cache()
+    cached = [cur]
     out_rows = []
     for rank in range(1, _BPE_ROUNDS + 1):
         pair_counts = (
@@ -812,6 +815,9 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sym"),
             "cnt",
         ).cache()
+        cached.append(cur)
+    for df in cached:
+        df.unpersist()
     return spark.createDataFrame(
         out_rows, "merge_rank int, pair string, pair_count bigint"
     )

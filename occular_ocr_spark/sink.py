@@ -103,11 +103,16 @@ def _current_ranges(manifest: Dict[int, dict], snap: int) -> set:
 
 def _write_json_atomic(path: str, obj: dict) -> None:
     """Write ``obj`` as JSON to ``path`` by tmp file + rename: a reader
-    sees the old file or the new one, never a torn one."""
+    sees the old file or the new one, never a torn one.  A failed write
+    removes its tmp file and re-raises."""
     fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 def _range_manifest_path(out_dir: str, range_id: int) -> str:

@@ -92,3 +92,30 @@ def test_extract_entry_uses_aqe_managed_exchange_not_pinned(spark):
     assert "RepartitionByExpression" in plan
     # no explicit numPartitions rides the repartition node
     assert "RepartitionByExpression [conv_id" in plan
+
+
+def _n_persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_bpe_merges_releases_its_round_caches(spark):
+    """The merge table is a local frame built from collected rows, so
+    none of the per-round symbol-table caches may outlive the call."""
+    from occular_ocr_spark import queries as q
+
+    q.release_persists()
+    before = _n_persistent_rdds(spark)
+    assert q.QUERIES["bpe_merges"](spark, SF).collect()
+    assert _n_persistent_rdds(spark) == before
+
+
+def test_sparse_retrieval_postings_cache_is_release_tracked(spark):
+    """The returned plan reads the cached postings, so they stay until
+    the harness calls release_persists() — and not after."""
+    from occular_ocr_spark import queries as q
+
+    q.release_persists()
+    before = _n_persistent_rdds(spark)
+    assert q.QUERIES["sparse_retrieval"](spark, SF).collect()
+    q.release_persists()
+    assert _n_persistent_rdds(spark) == before

@@ -262,6 +262,46 @@ def test_extractor_version_bump_recomputes_every_range(spark, transcripts, tmp_p
     assert sink.write(transcripts, src_snapshot_id=4) == []
 
 
+def test_failed_manifest_write_leaves_no_tmp_file(tmp_path, monkeypatch):
+    """A manifest write that fails mid-dump re-raises and removes its tmp
+    file instead of leaving it beside the committed manifests."""
+    mdir = tmp_path / "_manifest"
+    mdir.mkdir()
+
+    def boom(obj, f):
+        f.write('{"range_id": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(sink_mod.json, "dump", boom)
+    with pytest.raises(OSError, match="disk full"):
+        sink_mod._write_json_atomic(str(mdir / "range-00000.json"), {"range_id": 0})
+    assert os.listdir(mdir) == []
+
+
+def test_stray_tmp_manifest_is_ignored_on_snapshot_change(spark, transcripts, tmp_path):
+    """A torn ``.tmp`` left in ``_manifest/`` by an interrupted commit is
+    not read as a manifest: the snapshot-2 write recomputes every range,
+    completes, and keeps no snapshot-1 row or text."""
+    snap2 = transcripts.withColumn(
+        "text", F.concat(F.lit("snapshot-2 turn "), F.col("turn_idx").cast("string"))
+    )
+    sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
+    sink.write(transcripts, src_snapshot_id=1)
+    stray = os.path.join(str(tmp_path), "_manifest", "tmpk3x9q2.tmp")
+    with open(stray, "w") as f:
+        f.write('{"range_id": 0, "src_snapshot_id": 2, "extractor_ver')
+    assert set(load_manifest(str(tmp_path))) == set(range(N_RANGES))
+
+    second = sink.write(snap2, src_snapshot_id=2)
+    assert [e["range_id"] for e in second] == list(range(N_RANGES))
+    assert sink.is_complete()
+    assert {e["src_snapshot_id"] for e in load_manifest(str(tmp_path)).values()} == {2}
+    rows = _rows(spark, sink)
+    assert len(rows) == transcripts.count()
+    assert {r[4] for r in rows} == {2}
+    assert all(r[3].startswith("snapshot-2 turn ") for r in rows)
+
+
 def test_iceberg_sink_raises_without_runtime(spark):
     """Detect-and-use: without the iceberg-spark-runtime jar the sink
     must fail at construction with a pointer to the parquet twin."""
