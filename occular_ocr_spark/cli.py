@@ -18,7 +18,10 @@ Flag mapping from the reference surface:
 * ``--force-ocr``       -> same semantic: skip the trusted text-layer
                            parse, run the heuristic path (pipeline.py:147).
 * ``--workers``         -> ``--partitions`` (Spark task parallelism
-                           replaces the thread pool, pipeline.py:14-26).
+                           replaces the thread pool, pipeline.py:14-26);
+                           ``--salt N`` spreads a conversation over N
+                           keys of that exchange, so it needs
+                           ``--partitions``.
 * ``--out`` JSON file   -> ``--format json`` (one JSON object per line,
                            ensure_ascii=False like cli.py:165).
 * default text print    -> ``--text-only`` (conv_id, turn_idx, text).
@@ -55,18 +58,17 @@ def build_parser() -> argparse.ArgumentParser:
                    help="emit (conv_id, turn_idx, text) only")
     p.add_argument("--force-ocr", action="store_true",
                    help="skip trusted text-layer parse (reference --force-ocr)")
-    p.add_argument("--strategy", default=None,
-                   help="named extraction strategy from the registry "
-                        "(default: standard; see registry.Registry)")
     p.add_argument("--stdout", action="store_true",
                    help="print per-turn results to stdout instead of writing "
                         "a sink directory (reference cli.py:160-180 parity); "
                         "text lines, or one JSON object per line with "
                         "--format json")
     p.add_argument("--partitions", type=int, default=None,
-                   help="repartition width (reference --workers analog)")
+                   help="repartition width (reference --workers analog); "
+                        "0 lets AQE size the exchange")
     p.add_argument("--salt", type=int, default=0,
-                   help="salt buckets for skewed mega-conversations")
+                   help="salt buckets for skewed mega-conversations "
+                        "(needs --partitions: the salt lives in that exchange)")
     p.add_argument("--snapshot-id", type=int, default=None,
                    help="source snapshot id recorded in lineage")
     p.add_argument("--checkpointed", action="store_true",
@@ -111,6 +113,9 @@ def main(argv=None) -> int:
 
         if args.stop_after not in _stages:
             parser.error(f"--stop-after must be one of {', '.join(_stages)}")
+    if args.salt > 1 and args.partitions is None:
+        # without an exchange there is nothing to salt
+        parser.error("--salt needs --partitions (0 for an AQE-sized exchange)")
     if not args.stdout and not args.output:
         parser.error("--output is required unless --stdout is given")
 
@@ -155,7 +160,6 @@ def main(argv=None) -> int:
                 num_partitions=args.partitions,
                 salt_buckets=args.salt,
                 force_ocr=args.force_ocr,
-                strategy=args.strategy,
             )
             done = len(committed)
             total = sum(e["metrics"].get("n_rows", 0) for e in committed)
@@ -172,7 +176,6 @@ def main(argv=None) -> int:
                 force_ocr=args.force_ocr,
                 num_partitions=args.partitions,
                 salt_buckets=args.salt,
-                strategy=args.strategy,
             )
             if args.text_only
             else extract_detailed(
@@ -181,7 +184,6 @@ def main(argv=None) -> int:
                 src_snapshot_id=args.snapshot_id,
                 num_partitions=args.partitions,
                 salt_buckets=args.salt,
-                strategy=args.strategy,
             )
         )
         if args.stdout:

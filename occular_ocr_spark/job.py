@@ -8,10 +8,10 @@ Plan shape (SURVEY.md §3 target lifecycle):
 All custom logic lives inside Arrow-batched ``mapInArrow`` (no per-row
 Python at the DataFrame level, per BASELINE.json input_hint).  One Arrow
 batch plays the role of the reference recognizer's width bucket
-(``recognizer_onnx.py:60-86``); the named-strategy registry
-(``registry.Registry``) plays the role of the reference's instance cache
-(``registry.py:36-39`` — one init per executor Python worker, reused
-across batches) and its name->class extension point.
+(``recognizer_onnx.py:60-86``).  The reference's name->class registry
+and its per-process instance cache (``registry.py:29-52``) exist so that
+model weights load once; the kernel here (``core.extract_turn_raw``) is a
+stateless function, so the UDF calls it directly.
 """
 
 from __future__ import annotations
@@ -33,7 +33,6 @@ from pyspark.sql.types import (
 )
 
 from .extraction import core
-from .registry import Registry
 
 SPAN_TYPE = StructType(
     [
@@ -250,7 +249,6 @@ def extract_detailed(
     src_snapshot_id: Optional[int] = None,
     num_partitions: Optional[int] = None,
     salt_buckets: int = 0,
-    strategy: Optional[str] = None,
     jvm_plain_fast_path: bool = True,
 ) -> DataFrame:
     """Detailed extraction: one output row per turn, with blocks + lineage.
@@ -259,23 +257,25 @@ def extract_detailed(
     Output schema mirrors FIXTURES.md §2 plus the north rule's lineage
     columns (src_snapshot_id, partition_id, extractor_version).
 
-    ``strategy`` selects a named extractor from the registry
-    (``registry.Registry``, the reference's ``registry.py:18-52``
-    extension point); only the name + config ride the closure — the
-    instance is built once per executor Python worker and reused across
-    Arrow batches.  Default: the standard dual-path extractor.
+    ``num_partitions``: ``None`` runs no exchange (the caller already
+    partitioned), ``0`` an AQE-sized salted exchange and a positive int
+    a pinned-width one (see :func:`repartition_salted`).  Salt lives in
+    that exchange, so ``salt_buckets > 1`` without one is a
+    ``ValueError`` rather than a silent no-op.
 
-    ``jvm_plain_fast_path``: with the default strategy, payloads that
-    are PROVABLY plain (see :func:`_plain_safe_predicate`) are
-    extracted by pure Catalyst expressions and never enter a Python
-    worker — nor the salted exchange, since there is no Python stage to
-    balance for them.  At corpus scale this removes both the Arrow
-    transfer and the shuffle for the plain fraction of the data; the
-    remaining rows take the usual scan -> salted exchange -> mapInArrow
-    path.  Disabled automatically for non-default strategies (their
-    semantics are theirs to define).
+    ``jvm_plain_fast_path``: payloads that are PROVABLY plain (see
+    :func:`_plain_safe_predicate`) are extracted by pure Catalyst
+    expressions and never enter a Python worker — nor the salted
+    exchange, since there is no Python stage to balance for them.  At
+    corpus scale this removes both the Arrow transfer and the shuffle
+    for the plain fraction of the data; the remaining rows take the
+    usual scan -> salted exchange -> mapInArrow path.
     """
-    strat_name, strat_class = Registry.resolve_class(strategy)
+    if salt_buckets > 1 and num_partitions is None:
+        raise ValueError(
+            f"salt_buckets={salt_buckets} needs an exchange to salt: pass "
+            "num_partitions (0 for an AQE-sized exchange)"
+        )
     # Column pruning BEFORE the exchange: only (conv_id, turn_idx, text)
     # ride the shuffle — role/tool/ts never leave the scan.  The casts pin
     # the Arrow input types so the UDF can pass key columns through
@@ -287,7 +287,7 @@ def extract_detailed(
     )
     snap = -1 if src_snapshot_id is None else int(src_snapshot_id)
     fast = None
-    if jvm_plain_fast_path and strat_name == "standard":
+    if jvm_plain_fast_path:
         safe = _plain_safe_predicate()
         staged = df.where(safe).select(
             "conv_id", "turn_idx", _plain_blocks_expr().alias("blocks")
@@ -310,9 +310,6 @@ def extract_detailed(
         # ~safe is TRUE for null payloads too (safe is a strict false
         # there), so the Python path keeps the None-payload guard
         df = df.where(~safe)
-    # None = no exchange (caller already partitioned); 0 = column-only
-    # salted exchange whose width is AQE/config-managed (see
-    # repartition_salted); >0 = pinned width.
     if num_partitions is not None:
         df = repartition_salted(df, num_partitions, salt_buckets)
 
@@ -328,11 +325,9 @@ def extract_detailed(
 
         from pyspark import TaskContext
 
-        extractor = Registry.resolve(strat_name, strat_class, force_ocr=force_ocr)
         ctx = TaskContext.get()
         pid = int(ctx.partitionId()) if ctx is not None else -1
-        version = extractor.version
-        extract = extractor.extract
+        extract = core.extract_turn_raw
         for rb in batches:
             payloads = rb.column(rb.schema.get_field_index("text")).to_pylist()
             n = len(payloads)
@@ -345,7 +340,7 @@ def extract_detailed(
             b_text: list = []
             b_conf: list = []
             for payload in payloads:
-                method, blocks, text = extract(payload)
+                method, blocks, text = extract(payload, force_ocr)
                 methods.append(method)
                 texts_out.append(text)
                 for start, end, y, btext, conf in blocks:
@@ -377,7 +372,7 @@ def extract_detailed(
                     pa.array(texts_out, pa.string()),
                     pa.array([snap] * n, pa.int64()),
                     pa.array([pid] * n, pa.int32()),
-                    pa.array([version] * n, pa.string()),
+                    pa.array([core.EXTRACTOR_VERSION] * n, pa.string()),
                 ],
                 names=[f.name for f in EXTRACTED_SCHEMA.fields],
             )
@@ -392,51 +387,6 @@ def extract_text(df: DataFrame, **kwargs) -> DataFrame:
     """Simple API: per-turn plain text (the ``ocr()`` analog,
     ``ocr_skel/__init__.py:58-101``)."""
     return extract_detailed(df, **kwargs).select("conv_id", "turn_idx", "text")
-
-
-class ExtractionPipeline:
-    """Configured-pipeline facade — the ``OCRPipeline`` class analog
-    (``ocr_skel/__init__.py:142-234``: construct once with config, call
-    per input).  Holds strategy/partitioning/lineage settings so batch
-    jobs, notebooks, and the CLI share one configured object instead of
-    re-threading kwargs through every call.
-    """
-
-    def __init__(
-        self,
-        strategy: Optional[str] = None,
-        force_ocr: bool = False,
-        num_partitions: Optional[int] = None,
-        salt_buckets: int = 0,
-        src_snapshot_id: Optional[int] = None,
-    ):
-        # fail fast on an unknown strategy, like Registry.get_detector
-        # does at pipeline construction (pipeline.py:32-45)
-        Registry.resolve_class(strategy)
-        self.strategy = strategy
-        self.force_ocr = force_ocr
-        self.num_partitions = num_partitions
-        self.salt_buckets = salt_buckets
-        self.src_snapshot_id = src_snapshot_id
-
-    def process(self, df: DataFrame) -> DataFrame:
-        """Detailed per-turn records (``ocr_detailed`` analog)."""
-        return extract_detailed(
-            df,
-            force_ocr=self.force_ocr,
-            src_snapshot_id=self.src_snapshot_id,
-            num_partitions=self.num_partitions,
-            salt_buckets=self.salt_buckets,
-            strategy=self.strategy,
-        )
-
-    def get_text(self, df: DataFrame) -> DataFrame:
-        """Per-turn plain text (``get_text`` / ``ocr`` analog)."""
-        return self.process(df).select("conv_id", "turn_idx", "text")
-
-    def get_conversations(self, df: DataFrame) -> DataFrame:
-        """Whole-conversation assembly (page-list join analog)."""
-        return conversation_text(self.process(df))
 
 
 #: Turns per assembly chunk.  Phase-1 aggregation state is bounded by

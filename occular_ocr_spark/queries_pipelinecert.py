@@ -1,9 +1,9 @@
-"""Pipeline-certification catalog, round 4 (wave 98): five operators
+"""Pipeline-certification catalog, round 4 (wave 98): four operators
 that certify the EXTRACTION JOB's operational contract — lineage
-stamping, rerun idempotence, salt invariance, registry dispatch, and
-JVM-fast-path parity — as gate-checked catalog entries (until now
-these properties lived only in pytest; here each becomes a value-
-hash-checked 1-row certificate over the real pipeline).
+stamping, rerun idempotence, salt invariance, and JVM-fast-path
+parity — as gate-checked catalog entries (until now these properties
+lived only in pytest; here each becomes a value-hash-checked 1-row
+certificate over the real pipeline).
 
 All entries run ``job.extract_detailed`` over the flagship synthetic
 payloads (documents-derived, the ``extract_transcripts`` wrappers).
@@ -15,10 +15,9 @@ payloads (documents-derived, the ``extract_transcripts`` wrappers).
 * ``idempotent_rerun_audit`` — the SAME extraction run twice in one
   DAG, full-outer-joined on (conv, turn): row counts equal, zero
   unmatched, text equal everywhere — determinism/idempotence.
-* ``salted_repartition_equiv`` — salt_buckets=8 vs 0: identical
-  per-turn text (P1's skew salt must not change results).
-* ``strategy_registry_equiv`` — strategy='standard' explicitly vs
-  the default dispatch: identical per-turn text (C1 registry).
+* ``salted_repartition_equiv`` — an AQE-sized exchange salted 8 ways
+  vs unsalted: identical per-turn text (P1's skew salt must not change
+  results).
 * ``fastpath_parity_audit`` — jvm_plain_fast_path on vs off over
   plain payloads: identical per-turn text — the ADVICE-r2
   whitespace-parity fix held down by the correctness gate itself.
@@ -203,36 +202,20 @@ ORACLE_IDEMPOTENT_RERUN_AUDIT = _CERT_ORACLE
 def q_salted_repartition_equiv(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """salt_buckets=8 vs 0 — the skew salt never changes results."""
+    """A salted exchange vs an unsalted one — the skew salt never
+    changes results."""
     from .job import extract_detailed
 
-    a = extract_detailed(_payload_frame(spark, sf_dir), salt_buckets=8)
-    b = extract_detailed(_payload_frame(spark, sf_dir), salt_buckets=0)
+    a = extract_detailed(
+        _payload_frame(spark, sf_dir), num_partitions=0, salt_buckets=8
+    )
+    b = extract_detailed(
+        _payload_frame(spark, sf_dir), num_partitions=0, salt_buckets=0
+    )
     return _equiv_cert(a, b)
 
 
 ORACLE_SALTED_REPARTITION_EQUIV = _CERT_ORACLE
-
-
-# ---------------------------------------------------------------------------
-# strategy_registry_equiv
-# ---------------------------------------------------------------------------
-
-
-def q_strategy_registry_equiv(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Explicit strategy='standard' vs the default dispatch."""
-    from .job import extract_detailed
-
-    a = extract_detailed(
-        _payload_frame(spark, sf_dir), strategy="standard"
-    )
-    b = extract_detailed(_payload_frame(spark, sf_dir))
-    return _equiv_cert(a, b)
-
-
-ORACLE_STRATEGY_REGISTRY_EQUIV = _CERT_ORACLE
 
 
 # ---------------------------------------------------------------------------
@@ -261,7 +244,6 @@ PIPELINECERT_QUERIES = {
     "lineage_columns_audit": q_lineage_columns_audit,
     "idempotent_rerun_audit": q_idempotent_rerun_audit,
     "salted_repartition_equiv": q_salted_repartition_equiv,
-    "strategy_registry_equiv": q_strategy_registry_equiv,
     "fastpath_parity_audit": q_fastpath_parity_audit,
 }
 
@@ -269,7 +251,6 @@ PIPELINECERT_ORACLES = {
     "lineage_columns_audit": ORACLE_LINEAGE_COLUMNS_AUDIT,
     "idempotent_rerun_audit": ORACLE_IDEMPOTENT_RERUN_AUDIT,
     "salted_repartition_equiv": ORACLE_SALTED_REPARTITION_EQUIV,
-    "strategy_registry_equiv": ORACLE_STRATEGY_REGISTRY_EQUIV,
     "fastpath_parity_audit": ORACLE_FASTPATH_PARITY_AUDIT,
 }
 

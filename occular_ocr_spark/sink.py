@@ -3,9 +3,9 @@
 North-rule requirements implemented here:
 
 * **per-partition lineage + metrics** — every committed write range
-  records ``src_snapshot_id``, ``extractor_version``, bucket range, row
-  count, per-method counts, and distinct-conversation count in a
-  manifest entry; the rows themselves carry the lineage columns
+  records ``src_snapshot_id``, ``extractor_version``, bucket range and
+  bucket count, row count, per-method counts, and distinct-conversation
+  count in a manifest entry; the rows themselves carry the lineage columns
   (``job.EXTRACTED_SCHEMA``).
 * **resumable from checkpoint** — the manifest and lineage unit is a
   *range of conv_id-hash buckets*.  One call runs ONE Spark job over
@@ -19,7 +19,10 @@ North-rule requirements implemented here:
 * **lineage-checked skip** — a range counts as done only when its
   manifest records this call's ``src_snapshot_id`` and
   ``extractor_version``; any other range is pending and its buckets are
-  recomputed (lineage-based recompute, *Discretized Streams*).
+  recomputed (lineage-based recompute, *Discretized Streams*).  A sink
+  directory keeps the bucket layout it was first written with: an entry
+  recorded under another ``num_buckets`` or other bucket bounds for its
+  range is a ``ValueError``, never a range counted as done.
 * **idempotent re-run** — data is laid out ``data/part_bucket=K/`` and
   written with dynamic partition overwrite, so re-running a range
   *replaces* its buckets instead of appending; a pending range's old
@@ -53,7 +56,7 @@ from typing import Dict, List, Optional, Tuple
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .extraction import core
-from .job import extract_detailed
+from .job import EXTRACTED_SCHEMA, extract_detailed
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
@@ -99,6 +102,28 @@ def _current_ranges(manifest: Dict[int, dict], snap: int) -> set:
         if e.get("src_snapshot_id") == snap
         and e.get("extractor_version") == core.EXTRACTOR_VERSION
     }
+
+
+def _check_layout(
+    manifest: Dict[int, dict], num_buckets: int, ranges: List[Tuple[int, int]]
+) -> None:
+    """Raise ``ValueError`` when an entry of ``manifest`` was written under
+    another bucket layout: another ``num_buckets``, or other bucket
+    bounds for its ``range_id``.  Such an entry describes buckets this
+    layout does not cover with that range, so counting it as done would
+    skip buckets nobody wrote.  Entries that predate the ``num_buckets``
+    field are checked on their bounds only."""
+    for r, e in sorted(manifest.items()):
+        got = (e.get("bucket_lo"), e.get("bucket_hi"))
+        want = ranges[r] if r < len(ranges) else None
+        if e.get("num_buckets", num_buckets) != num_buckets or got != want:
+            mine = f"buckets {want[0]}-{want[1]}" if want else "no such range"
+            raise ValueError(
+                f"bucket layout mismatch: the manifest's range {r} is buckets "
+                f"{got[0]}-{got[1]} of num_buckets={e.get('num_buckets', '?')}; "
+                f"this sink (num_buckets={num_buckets}, {len(ranges)} ranges) "
+                f"has {mine} for range {r}"
+            )
 
 
 def _write_json_atomic(path: str, obj: dict) -> None:
@@ -148,7 +173,6 @@ class CheckpointedParquetSink:
         salt_buckets: int = 0,
         max_ranges: Optional[int] = None,
         force_ocr: bool = False,
-        strategy: Optional[str] = None,
     ) -> List[dict]:
         """Extract + write every pending range in one Spark job; returns
         the manifest entries committed by THIS call, in range order.
@@ -159,11 +183,15 @@ class CheckpointedParquetSink:
         incremental runs / fault-injection tests); a later call with the
         same ``out_dir`` resumes where this left off.  The range stays
         the manifest and lineage unit: the job's output is committed
-        first, then one manifest per range.
+        first, then one manifest per range.  A directory written under
+        another bucket layout raises ``ValueError`` before anything is
+        removed or written.
         """
         snap = -1 if src_snapshot_id is None else int(src_snapshot_id)
         ranges = _ranges(self.num_buckets, self.num_ranges)
-        done = _current_ranges(load_manifest(self.out_dir), snap)
+        manifest = load_manifest(self.out_dir)
+        _check_layout(manifest, self.num_buckets, ranges)
+        done = _current_ranges(manifest, snap)
         pending = [r for r in range(len(ranges)) if r not in done][:max_ranges]
         if not pending:
             return []
@@ -194,7 +222,6 @@ class CheckpointedParquetSink:
             src_snapshot_id=src_snapshot_id,
             num_partitions=num_partitions,
             salt_buckets=salt_buckets,
-            strategy=strategy,
         ).withColumn("part_bucket", bucket)
         # the per-range metrics, as conditional aggregates of one observe
         range_id = range_of(F.col("part_bucket"))
@@ -232,6 +259,7 @@ class CheckpointedParquetSink:
                 "range_id": r,
                 "bucket_lo": lo,
                 "bucket_hi": hi,
+                "num_buckets": self.num_buckets,
                 "src_snapshot_id": snap,
                 "extractor_version": core.EXTRACTOR_VERSION,
                 "metrics": {
@@ -249,13 +277,15 @@ class CheckpointedParquetSink:
     def is_complete(self) -> bool:
         """True when every range is done for one ``src_snapshot_id`` and
         the current ``extractor_version``: the state in which ``write``
-        at that snapshot has nothing left to run."""
+        at that snapshot has nothing left to run.  Raises ``ValueError``
+        like ``write`` when the directory holds another bucket layout."""
         manifest = load_manifest(self.out_dir)
+        ranges = _ranges(self.num_buckets, self.num_ranges)
+        _check_layout(manifest, self.num_buckets, ranges)
         snaps = {e.get("src_snapshot_id") for e in manifest.values()}
         if len(snaps) != 1:
             return False
-        n = len(_ranges(self.num_buckets, self.num_ranges))
-        return set(range(n)) <= _current_ranges(manifest, snaps.pop())
+        return set(range(len(ranges))) <= _current_ranges(manifest, snaps.pop())
 
 
 def iceberg_runtime_available(spark: SparkSession) -> bool:
@@ -268,13 +298,9 @@ def iceberg_runtime_available(spark: SparkSession) -> bool:
         return False
 
 
-_EXTRACTED_DDL = """
-  conv_id STRING, turn_idx INT, method STRING,
-  blocks ARRAY<STRUCT<span: STRUCT<start: INT, end: INT, y: INT>,
-                      text: STRING, confidence: DOUBLE>>,
-  text STRING, src_snapshot_id BIGINT, partition_id INT,
-  extractor_version STRING
-"""
+_EXTRACTED_DDL = ", ".join(
+    f"{f.name} {f.dataType.simpleString()}" for f in EXTRACTED_SCHEMA.fields
+)
 
 
 class IcebergSink:
@@ -329,7 +355,6 @@ class IcebergSink:
         num_partitions: Optional[int] = None,
         salt_buckets: int = 0,
         force_ocr: bool = False,
-        strategy: Optional[str] = None,
     ) -> None:
         """Extract + MERGE.  Idempotent: re-running the same input
         updates matched turns in place (same rows -> same values), so a
@@ -342,7 +367,6 @@ class IcebergSink:
             src_snapshot_id=src_snapshot_id,
             num_partitions=num_partitions,
             salt_buckets=salt_buckets,
-            strategy=strategy,
         )
         view = f"occ_updates_{abs(hash(self.table)) % 10**8}"
         ext.createOrReplaceTempView(view)

@@ -22,27 +22,9 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..job import extract_detailed
-
-# BASELINE.json input_hint schema — file streams must declare it up front.
-TRANSCRIPT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), True),
-        StructField("turn_idx", IntegerType(), True),
-        StructField("role", StringType(), True),
-        StructField("text", StringType(), True),
-        StructField("tool", StringType(), True),
-        StructField("ts", TimestampType(), True),
-    ]
-)
+from ..sources import TRANSCRIPT_SCHEMA
 
 
 def read_transcript_stream(
@@ -50,7 +32,8 @@ def read_transcript_stream(
     input_dir: str,
     max_files_per_trigger: Optional[int] = None,
 ) -> DataFrame:
-    """File-source stream of transcript turns.
+    """File-source stream of transcript turns (file streams must declare
+    their schema up front: ``sources.TRANSCRIPT_SCHEMA``).
 
     ``maxFilesPerTrigger`` bounds micro-batch size — the streaming analog
     of the batch job's partition sizing (keeps one micro-batch's Arrow
@@ -98,7 +81,6 @@ def extract_stream(
     available_now: bool = True,
     src_snapshot_id: Optional[int] = None,
     max_files_per_trigger: Optional[int] = None,
-    strategy: Optional[str] = None,
 ) -> StreamingQuery:
     """Continuous extraction: readStream -> mapInArrow extract -> parquet.
 
@@ -109,9 +91,7 @@ def extract_stream(
     — the bounded-backfill trigger; ``False`` keeps the query live.
     """
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    extracted = extract_detailed(
-        stream, src_snapshot_id=src_snapshot_id, strategy=strategy
-    )
+    extracted = extract_detailed(stream, src_snapshot_id=src_snapshot_id)
     writer = (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)

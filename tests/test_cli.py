@@ -70,6 +70,18 @@ def test_cli_checkpointed_flag_conflicts():
         main(["--input", "x"])
 
 
+def test_cli_salt_needs_partitions():
+    # --salt lives in the --partitions exchange; without one it would do
+    # nothing, so the CLI refuses it before starting Spark
+    import pytest
+
+    from occular_ocr_spark.cli import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", "x", "--output", "y", "--salt", "8"])
+    assert exc.value.code == 2
+
+
 def test_cli_checkpointed_resume(tmp_path):
     inp = str(tmp_path / "turns.parquet")
     out = str(tmp_path / "ckpt_sink")

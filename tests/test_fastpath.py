@@ -82,15 +82,6 @@ def test_fast_path_plan_shape(spark):
     assert p.count("aggregate(") == 1
 
 
-def test_fast_path_disabled_for_custom_strategies(spark):
-    out = extract_detailed(_df(spark), strategy="plain_only").collect()
-    # plain_only treats EVERY payload as plain — including the HTML one;
-    # were the fast path active with its own version string, lineage
-    # would disagree
-    assert {r["method"] for r in out} == {"plain"}
-    assert all(r["extractor_version"].endswith("+plain-only") for r in out)
-
-
 def test_fast_path_off_matches_on(spark):
     on = extract_detailed(_df(spark)).select("conv_id", "turn_idx", "method", "text")
     off = extract_detailed(_df(spark), jvm_plain_fast_path=False).select(

@@ -2,9 +2,12 @@
 certificate's flags must hold and its counts must equal the corpus
 size; a failure here means the extraction job broke one of its
 operational contracts (lineage, determinism, salt invariance,
-registry dispatch, fast-path parity)."""
+fast-path parity)."""
 
 from __future__ import annotations
+
+import contextlib
+import io
 
 import duckdb
 
@@ -15,7 +18,6 @@ from occular_ocr_spark.queries_pipelinecert import (
     q_idempotent_rerun_audit,
     q_lineage_columns_audit,
     q_salted_repartition_equiv,
-    q_strategy_registry_equiv,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -48,11 +50,19 @@ def test_idempotent_rerun(spark):
 
 
 def test_salt_invariance(spark):
-    _assert_cert(q_salted_repartition_equiv(spark, SF).collect()[0], _n_docs())
-
-
-def test_registry_dispatch(spark):
-    _assert_cert(q_strategy_registry_equiv(spark, SF).collect()[0], _n_docs())
+    cert = q_salted_repartition_equiv(spark, SF)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        cert.explain("formatted")
+    # each side runs its own repartition; only one of them is salted on
+    # the turn index (the join's exchanges are ENSURE_REQUIREMENTS)
+    exchanges = [
+        ln for ln in buf.getvalue().splitlines()
+        if ln.startswith("Arguments:") and "REPARTITION_BY" in ln
+    ]
+    assert len(exchanges) == 2
+    assert sum("pmod(turn_idx" in ln for ln in exchanges) == 1
+    _assert_cert(cert.collect()[0], _n_docs())
 
 
 def test_fastpath_parity(spark):
@@ -64,7 +74,6 @@ def test_registered_in_catalog():
         "lineage_columns_audit",
         "idempotent_rerun_audit",
         "salted_repartition_equiv",
-        "strategy_registry_equiv",
         "fastpath_parity_audit",
     ):
         assert name in Q.QUERIES and name in Q.ORACLES

@@ -302,6 +302,71 @@ def test_stray_tmp_manifest_is_ignored_on_snapshot_change(spark, transcripts, tm
     assert all(r[3].startswith("snapshot-2 turn ") for r in rows)
 
 
+def test_resume_with_other_range_layout_raises(spark, transcripts, tmp_path):
+    """A sink directory started with 8 ranges and resumed with 4 must not
+    count its range 0 (buckets 0-1) as the 4-range layout's range 0
+    (buckets 0-3): that resume would commit ranges 1-3 and report the
+    sink complete with buckets 2 and 3 never written.  Both calls raise
+    and leave the data already written untouched."""
+    out = str(tmp_path)
+    CheckpointedParquetSink(out, N_BUCKETS, 8).write(
+        transcripts, src_snapshot_id=1, max_ranges=1
+    )
+    manifest = load_manifest(out)
+    before = _rows(spark, CheckpointedParquetSink(out, N_BUCKETS, 8))
+
+    resumed = CheckpointedParquetSink(out, N_BUCKETS, 4)
+    with pytest.raises(ValueError, match="buckets 0-1 of num_buckets=16.*buckets 0-3"):
+        resumed.write(transcripts, src_snapshot_id=1)
+    with pytest.raises(ValueError, match="bucket layout mismatch"):
+        resumed.is_complete()
+    assert load_manifest(out) == manifest
+    assert manifest[0]["num_buckets"] == N_BUCKETS
+    assert _rows(spark, resumed) == before
+
+
+def test_resume_with_other_num_buckets_raises(spark, transcripts, tmp_path):
+    """16 buckets in 8 ranges and 8 buckets in 4 ranges both make range 0
+    buckets 0-1, but bucket 0 holds other conversations under each; only
+    the recorded ``num_buckets`` tells them apart."""
+    out = str(tmp_path)
+    CheckpointedParquetSink(out, 16, 8).write(
+        transcripts, src_snapshot_id=1, max_ranges=1
+    )
+    other = CheckpointedParquetSink(out, 8, 4)
+    with pytest.raises(ValueError, match="num_buckets=16.*num_buckets=8"):
+        other.write(transcripts, src_snapshot_id=1)
+    with pytest.raises(ValueError, match="num_buckets=16.*num_buckets=8"):
+        other.is_complete()
+
+
+def test_manifest_without_num_buckets_is_checked_on_bounds(tmp_path):
+    """Entries that predate the ``num_buckets`` field still resume under
+    the layout whose bounds they record, and raise under any other."""
+    out = str(tmp_path)
+    for r, (lo, hi) in enumerate(sink_mod._ranges(N_BUCKETS, N_RANGES)):
+        sink_mod._commit(out, {
+            "range_id": r, "bucket_lo": lo, "bucket_hi": hi, "src_snapshot_id": 3,
+            "extractor_version": core.EXTRACTOR_VERSION, "metrics": {},
+        })
+    assert CheckpointedParquetSink(out, N_BUCKETS, N_RANGES).is_complete()
+    with pytest.raises(ValueError, match="bucket layout mismatch"):
+        CheckpointedParquetSink(out, N_BUCKETS, 8).is_complete()
+
+
+def test_extracted_ddl_matches_extracted_schema(spark):
+    """The Iceberg table DDL declares the extraction job's schema: same
+    column names and types, nested fields included (a DDL column list
+    leaves every column nullable)."""
+    from occular_ocr_spark.job import EXTRACTED_SCHEMA
+
+    ddl = spark.createDataFrame([], sink_mod._EXTRACTED_DDL).schema
+    assert [(f.name, f.dataType.simpleString()) for f in ddl.fields] == [
+        (f.name, f.dataType.simpleString()) for f in EXTRACTED_SCHEMA.fields
+    ]
+    assert all(f.nullable for f in ddl.fields)
+
+
 def test_iceberg_sink_raises_without_runtime(spark):
     """Detect-and-use: without the iceberg-spark-runtime jar the sink
     must fail at construction with a pointer to the parquet twin."""

@@ -7,6 +7,7 @@ rasterization bottleneck, pipeline.py:139-141).  The partition_id
 lineage column makes the spread directly observable.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from occular_ocr_spark.fixtures import transcripts_pandas
@@ -56,6 +57,16 @@ def test_salted_mega_conversation_spreads(spark):
     a = sorted(((key(r), r["text"]) for r in out.select("conv_id", "turn_idx", "text").collect()))
     b = sorted(((key(r), r["text"]) for r in unsalted.select("conv_id", "turn_idx", "text").collect()))
     assert a == b
+
+
+def test_salt_without_exchange_raises(spark):
+    """Salt is a key of the exchange: with ``num_partitions=None`` there is
+    none, so a salt would be dropped without a word."""
+    df, _ = _mega_fixture(spark)
+    with pytest.raises(ValueError, match="salt_buckets=8 needs an exchange"):
+        extract_detailed(df, salt_buckets=8)
+    extract_detailed(df, num_partitions=0, salt_buckets=8)  # salted exchange
+    extract_detailed(df, salt_buckets=1)  # one bucket is no salt
 
 
 # ---------------------------------------------------------------------------
