@@ -116,6 +116,8 @@ def main(argv=None) -> int:
     if args.salt > 1 and args.partitions is None:
         # without an exchange there is nothing to salt
         parser.error("--salt needs --partitions (0 for an AQE-sized exchange)")
+    if args.num_buckets < 1 or args.num_ranges < 1:
+        parser.error("--num-buckets and --num-ranges must be at least 1")
     if not args.stdout and not args.output:
         parser.error("--output is required unless --stdout is given")
 

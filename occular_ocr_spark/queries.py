@@ -2830,25 +2830,19 @@ from . import queries_quantsurface as _queries_quantsurface  # noqa: E402,F401
 from . import queries_eventtime as _queries_eventtime  # noqa: E402,F401
 from . import queries_annotation as _queries_annotation  # noqa: E402,F401
 from . import queries_identities as _queries_identities  # noqa: E402,F401
-from . import queries_fulfillment as _queries_fulfillment  # noqa: E402,F401
 from . import queries_sampling2 as _queries_sampling2  # noqa: E402,F401
 from . import queries_survival2 as _queries_survival2  # noqa: E402,F401
-from . import queries_inventory as _queries_inventory  # noqa: E402,F401
 from . import queries_ablation as _queries_ablation  # noqa: E402,F401
-from . import queries_queueing as _queries_queueing  # noqa: E402,F401
 from . import queries_cbostats as _queries_cbostats  # noqa: E402,F401
 from . import queries_sre as _queries_sre  # noqa: E402,F401
 from . import queries_bigrowth as _queries_bigrowth  # noqa: E402,F401
 from . import queries_joinprune as _queries_joinprune  # noqa: E402,F401
 from . import queries_winrewrite as _queries_winrewrite  # noqa: E402,F401
-from . import queries_demandfc as _queries_demandfc  # noqa: E402,F401
 from . import queries_decomp as _queries_decomp  # noqa: E402,F401
 from . import queries_causal as _queries_causal  # noqa: E402,F401
 from . import queries_gridfit as _queries_gridfit  # noqa: E402,F401
-from . import queries_uniteco as _queries_uniteco  # noqa: E402,F401
 from . import queries_spans as _queries_spans  # noqa: E402,F401
 from . import queries_attribution as _queries_attribution  # noqa: E402,F401
-from . import queries_chainladder as _queries_chainladder  # noqa: E402,F401
 from . import queries_depdiscovery as _queries_depdiscovery  # noqa: E402,F401
 from . import queries_procmine as _queries_procmine  # noqa: E402,F401
 from . import queries_lifecycle as _queries_lifecycle  # noqa: E402,F401
@@ -2858,10 +2852,6 @@ from . import queries_pipelinecert as _queries_pipelinecert  # noqa: E402,F401
 from . import queries_embedqual as _queries_embedqual  # noqa: E402,F401
 from . import queries_convcert as _queries_convcert  # noqa: E402,F401
 from . import queries_ratelimit as _queries_ratelimit  # noqa: E402,F401
-from . import queries_pricing as _queries_pricing  # noqa: E402,F401
-from . import queries_risk as _queries_risk  # noqa: E402,F401
-from . import queries_tradeflow as _queries_tradeflow  # noqa: E402,F401
 from . import queries_weighted as _queries_weighted  # noqa: E402,F401
 from . import queries_aqp as _queries_aqp  # noqa: E402,F401
-from . import queries_resilience as _queries_resilience  # noqa: E402,F401
 from . import queries_robustscale_dist as _queries_robustscale_dist  # noqa: E402,F401

@@ -322,8 +322,8 @@ def q_reuse_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # lower median off (event_type, gap)-compressed cumulative counts
     # instead of ranking raw gap rows in ≤5 fixed event_type partitions
-    # (the ship_latency_profile / median_polish r6 fix); the windows
-    # below run over distinct gap values only
+    # (the same fix as median_polish); the windows below run over
+    # distinct gap values only
     med = (
         gaps.groupBy("event_type", "gap")
         .agg(F.count("*").alias("_n"))

@@ -33,10 +33,9 @@ sqrt, weighted-variance ratio) are IEEE on exact integers in fixed
 op order, micro-quantized.
 
 Scale notes: the weighted quantiles reduce to the price value
-histogram (value-bounded); the Gini ranks the ≤#parts frame (the
-``abc_classification`` precedent — parts are catalog-sized, not
-fact-sized); intervals/planners are per-source partial aggs crossed
-with constant grids.
+histogram (value-bounded); the Gini ranks the ≤#parts frame (parts
+are catalog-sized, not fact-sized); intervals/planners are per-source
+partial aggs crossed with constant grids.
 
 Reference parity: axis-B net-new corpus ops (the reference
 Bodhi42/Occular-ocr engine is per-document OCR only; SURVEY.md §2,

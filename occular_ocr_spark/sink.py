@@ -4,9 +4,12 @@ North-rule requirements implemented here:
 
 * **per-partition lineage + metrics** — every committed write range
   records ``src_snapshot_id``, ``extractor_version``, bucket range and
-  bucket count, row count, per-method counts, and distinct-conversation
-  count in a manifest entry; the rows themselves carry the lineage columns
-  (``job.EXTRACTED_SCHEMA``).
+  bucket count, row count, per-method counts, and ``n_convs`` in a
+  manifest entry; the rows themselves carry the lineage columns
+  (``job.EXTRACTED_SCHEMA``).  ``n_convs`` is an *estimate* of the
+  range's distinct conversations (``approx_count_distinct``, an HLL++
+  sketch with 5% relative standard deviation), not an exact count; the
+  row and per-method counts are exact.
 * **resumable from checkpoint** — the manifest and lineage unit is a
   *range of conv_id-hash buckets*.  One call runs ONE Spark job over
   every pending range at once; after that job's atomic commit, one
@@ -76,7 +79,7 @@ def _bucket_col(num_buckets: int):
 
 def _ranges(num_buckets: int, num_ranges: int) -> List[Tuple[int, int]]:
     """Split [0, num_buckets) into num_ranges contiguous checkpoint units."""
-    num_ranges = max(1, min(num_ranges, num_buckets))
+    num_ranges = min(num_ranges, num_buckets)
     step = (num_buckets + num_ranges - 1) // num_ranges
     return [(lo, min(lo + step, num_buckets) - 1) for lo in range(0, num_buckets, step)]
 
@@ -159,6 +162,11 @@ class CheckpointedParquetSink:
         num_buckets: int = 64,
         num_ranges: int = 8,
     ):
+        if num_buckets < 1 or num_ranges < 1:
+            raise ValueError(
+                f"num_buckets ({num_buckets}) and num_ranges ({num_ranges}) "
+                "must both be at least 1"
+            )
         self.out_dir = out_dir
         self.data_dir = os.path.join(out_dir, DATA_DIR)
         self.num_buckets = num_buckets
@@ -230,8 +238,10 @@ class CheckpointedParquetSink:
             in_r = range_id == r
             aggs += [
                 F.sum(in_r.cast("long")).alias(f"n_rows_{r}"),
-                # Observation forbids DISTINCT aggregates; the HLL sketch is
-                # also the right answer at 10^12 rows.
+                # an estimate, not a count: the HLL++ sketch has 5% relative
+                # SD and can miss by several conversations per range.
+                # Observation forbids DISTINCT aggregates, and an exact
+                # read-back of the written buckets costs a second job.
                 F.approx_count_distinct(F.when(in_r, F.col("conv_id"))).alias(f"n_convs_{r}"),
             ] + [
                 F.sum((in_r & (F.col("method") == m)).cast("long")).alias(f"{k}_{r}")

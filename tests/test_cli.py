@@ -82,6 +82,24 @@ def test_cli_salt_needs_partitions():
     assert exc.value.code == 2
 
 
+def test_cli_rejects_layout_without_buckets_or_ranges(monkeypatch):
+    # refused by the parser, before a Spark session is built
+    import pytest
+    from pyspark.sql import SparkSession
+
+    from occular_ocr_spark.cli import main
+
+    def no_spark(self):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_spark)
+    for flag, value in (("--num-buckets", "0"), ("--num-buckets", "-4"),
+                        ("--num-ranges", "0")):
+        with pytest.raises(SystemExit) as exc:
+            main(["--input", "x", "--output", "y", "--checkpointed", flag, value])
+        assert exc.value.code == 2
+
+
 def test_cli_checkpointed_resume(tmp_path):
     inp = str(tmp_path / "turns.parquet")
     out = str(tmp_path / "ckpt_sink")

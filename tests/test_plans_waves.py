@@ -29,19 +29,6 @@ def test_dfg_shuffles_once_on_user(spark):
     assert "windowspecdefinition(u" in p.replace("\n", " ") or "Window" in p
 
 
-def test_croston_windows_are_per_part(spark):
-    p = plan_of(Q.QUERIES["croston_forecast"](spark, SF_DIR))
-    # the lag window must be partitioned by part key
-    assert re.search(r"windowspecdefinition\(l_partkey", p)
-    assert "partial_" in p  # the demand partial agg
-
-
-def test_triangle_window_keyed_by_cohort(spark):
-    p = plan_of(Q.QUERIES["claims_dev_triangle"](spark, SF_DIR))
-    assert re.search(r"windowspecdefinition\(cohort", p)
-    assert "partial_sum" in p
-
-
 def test_shapley_reduces_before_grid(spark):
     p = plan_of(Q.QUERIES["shapley_attribution"](spark, SF_DIR))
     # per-user partial agg runs before the 16-row subset algebra
@@ -54,12 +41,6 @@ def test_fd_scan_two_level_aggregation(spark):
     # (pair, a, b) partial agg then per-LHS-group reduction
     assert p.count("HashAggregate") >= 4
     assert "partial_count" in p
-
-
-def test_ltv_no_unkeyed_window(spark):
-    p = plan_of(Q.QUERIES["cohort_ltv_table"](spark, SF_DIR))
-    # all windows (if any) keyed; the cohort min is a partial agg
-    assert "partial_min" in p or "partial_sum" in p
 
 
 def test_bloom_filter_audit_broadcasts_sketch(spark):

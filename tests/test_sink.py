@@ -354,6 +354,16 @@ def test_manifest_without_num_buckets_is_checked_on_bounds(tmp_path):
         CheckpointedParquetSink(out, N_BUCKETS, 8).is_complete()
 
 
+def test_layout_without_buckets_or_ranges_raises(tmp_path):
+    """A layout with no buckets or no ranges is refused when the sink is
+    built, before any write: 0 buckets cannot be split into ranges, and
+    negative buckets would write ``part_bucket`` values that stale-bucket
+    removal never visits."""
+    for num_buckets, num_ranges in ((0, 8), (-4, 8), (16, 0), (16, -1)):
+        with pytest.raises(ValueError, match="at least 1"):
+            CheckpointedParquetSink(str(tmp_path), num_buckets, num_ranges)
+
+
 def test_extracted_ddl_matches_extracted_schema(spark):
     """The Iceberg table DDL declares the extraction job's schema: same
     column names and types, nested fields included (a DDL column list
