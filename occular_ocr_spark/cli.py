@@ -21,7 +21,10 @@ Flag mapping from the reference surface:
                            replaces the thread pool, pipeline.py:14-26);
                            ``--salt N`` spreads a conversation over N
                            keys of that exchange, so it needs
-                           ``--partitions``.
+                           ``--partitions``.  With ``--checkpointed``,
+                           ``--partitions`` pins the width of the sink's
+                           rebalance on ``part_bucket`` and ``--salt`` is
+                           refused: AQE splits a hot bucket instead.
 * ``--out`` JSON file   -> ``--format json`` (one JSON object per line,
                            ensure_ascii=False like cli.py:165).
 * default text print    -> ``--text-only`` (conv_id, turn_idx, text).
@@ -65,10 +68,14 @@ def build_parser() -> argparse.ArgumentParser:
                         "--format json")
     p.add_argument("--partitions", type=int, default=None,
                    help="repartition width (reference --workers analog); "
-                        "0 lets AQE size the exchange")
+                        "0 lets AQE size the exchange; with --checkpointed "
+                        "it pins the width of the sink's rebalance on "
+                        "part_bucket (default: AQE sizes it)")
     p.add_argument("--salt", type=int, default=0,
                    help="salt buckets for skewed mega-conversations "
-                        "(needs --partitions: the salt lives in that exchange)")
+                        "(needs --partitions: the salt lives in that exchange; "
+                        "not with --checkpointed, where AQE splits a hot "
+                        "bucket instead)")
     p.add_argument("--snapshot-id", type=int, default=None,
                    help="source snapshot id recorded in lineage")
     p.add_argument("--checkpointed", action="store_true",
@@ -113,6 +120,10 @@ def main(argv=None) -> int:
 
         if args.stop_after not in _stages:
             parser.error(f"--stop-after must be one of {', '.join(_stages)}")
+    if args.checkpointed and args.salt > 1:
+        # the sink's only exchange is its rebalance on part_bucket, where
+        # AQE splits a hot bucket by size: there is nothing to salt
+        parser.error("--salt is not used with --checkpointed; drop it")
     if args.salt > 1 and args.partitions is None:
         # without an exchange there is nothing to salt
         parser.error("--salt needs --partitions (0 for an AQE-sized exchange)")
@@ -160,7 +171,6 @@ def main(argv=None) -> int:
                 read_transcripts(spark, args.input, args.input_format),
                 src_snapshot_id=args.snapshot_id,
                 num_partitions=args.partitions,
-                salt_buckets=args.salt,
                 force_ocr=args.force_ocr,
             )
             done = len(committed)

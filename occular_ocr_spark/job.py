@@ -243,6 +243,89 @@ def _guard_zipimport_rereads() -> None:
     zi.invalidate_caches = invalidate_caches
 
 
+def extraction_input(df: DataFrame) -> DataFrame:
+    """The columns :func:`extract_batches` reads, projected BEFORE any
+    exchange: only (conv_id, turn_idx, text) ride the shuffle — role/tool/ts
+    never leave the scan.  The casts pin the Arrow input types so the UDF
+    can pass key columns through zero-copy."""
+    return df.select(
+        F.col("conv_id").cast("string").alias("conv_id"),
+        F.col("turn_idx").cast("int").alias("turn_idx"),
+        F.col("text").cast("string").alias("text"),
+    )
+
+
+def extract_batches(batches, force_ocr: bool, snap: int):
+    """The Arrow batch loop of every extraction UDF: for each input
+    ``RecordBatch`` (with ``conv_id``, ``turn_idx`` and ``text``) yield
+    ``(in_rb, out_rb)``, ``out_rb`` being its turns under
+    ``EXTRACTED_SCHEMA`` with ``src_snapshot_id`` = ``snap``.
+
+    Runs inside a ``mapInArrow`` body.  The nested blocks column is
+    assembled directly as ListArray<StructArray> from flat builders —
+    ~2x faster end-to-end than pandas object-column -> Arrow struct
+    inference, which profiling showed cost as much as the extraction
+    itself.  One Arrow batch plays the reference recognizer's width
+    bucket (recognizer_onnx.py:60-86).
+    """
+    _guard_zipimport_rereads()
+    import pyarrow as pa
+
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    pid = int(ctx.partitionId()) if ctx is not None else -1
+    extract = core.extract_turn_raw
+    for rb in batches:
+        payloads = rb.column(rb.schema.get_field_index("text")).to_pylist()
+        n = len(payloads)
+        methods: list = []
+        texts_out: list = []
+        offsets = [0]
+        b_start: list = []
+        b_end: list = []
+        b_y: list = []
+        b_text: list = []
+        b_conf: list = []
+        for payload in payloads:
+            method, blocks, text = extract(payload, force_ocr)
+            methods.append(method)
+            texts_out.append(text)
+            for start, end, y, btext, conf in blocks:
+                b_start.append(start)
+                b_end.append(end)
+                b_y.append(y)
+                b_text.append(btext)
+                b_conf.append(conf)
+            offsets.append(len(b_start))
+        span_arr = pa.StructArray.from_arrays(
+            [
+                pa.array(b_start, pa.int32()),
+                pa.array(b_end, pa.int32()),
+                pa.array(b_y, pa.int32()),
+            ],
+            names=["start", "end", "y"],
+        )
+        block_arr = pa.StructArray.from_arrays(
+            [span_arr, pa.array(b_text, pa.string()), pa.array(b_conf, pa.float64())],
+            names=["span", "text", "confidence"],
+        )
+        blocks_arr = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), block_arr)
+        yield rb, pa.RecordBatch.from_arrays(
+            [
+                rb.column(rb.schema.get_field_index("conv_id")),
+                rb.column(rb.schema.get_field_index("turn_idx")),
+                pa.array(methods, pa.string()),
+                blocks_arr,
+                pa.array(texts_out, pa.string()),
+                pa.array([snap] * n, pa.int64()),
+                pa.array([pid] * n, pa.int32()),
+                pa.array([core.EXTRACTOR_VERSION] * n, pa.string()),
+            ],
+            names=[f.name for f in EXTRACTED_SCHEMA.fields],
+        )
+
+
 def extract_detailed(
     df: DataFrame,
     force_ocr: bool = False,
@@ -276,15 +359,7 @@ def extract_detailed(
             f"salt_buckets={salt_buckets} needs an exchange to salt: pass "
             "num_partitions (0 for an AQE-sized exchange)"
         )
-    # Column pruning BEFORE the exchange: only (conv_id, turn_idx, text)
-    # ride the shuffle — role/tool/ts never leave the scan.  The casts pin
-    # the Arrow input types so the UDF can pass key columns through
-    # zero-copy.
-    df = df.select(
-        F.col("conv_id").cast("string").alias("conv_id"),
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        F.col("text").cast("string").alias("text"),
-    )
+    df = extraction_input(df)
     snap = -1 if src_snapshot_id is None else int(src_snapshot_id)
     fast = None
     if jvm_plain_fast_path:
@@ -314,68 +389,8 @@ def extract_detailed(
         df = repartition_salted(df, num_partitions, salt_buckets)
 
     def run(batches):
-        _guard_zipimport_rereads()
-        # Arrow-native batch loop (mapInArrow): the nested blocks column is
-        # assembled directly as ListArray<StructArray> from flat builders —
-        # ~2x faster end-to-end than pandas object-column -> Arrow struct
-        # inference, which profiling showed cost as much as the extraction
-        # itself.  One Arrow batch plays the reference recognizer's width
-        # bucket (recognizer_onnx.py:60-86).
-        import pyarrow as pa
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = int(ctx.partitionId()) if ctx is not None else -1
-        extract = core.extract_turn_raw
-        for rb in batches:
-            payloads = rb.column(rb.schema.get_field_index("text")).to_pylist()
-            n = len(payloads)
-            methods: list = []
-            texts_out: list = []
-            offsets = [0]
-            b_start: list = []
-            b_end: list = []
-            b_y: list = []
-            b_text: list = []
-            b_conf: list = []
-            for payload in payloads:
-                method, blocks, text = extract(payload, force_ocr)
-                methods.append(method)
-                texts_out.append(text)
-                for start, end, y, btext, conf in blocks:
-                    b_start.append(start)
-                    b_end.append(end)
-                    b_y.append(y)
-                    b_text.append(btext)
-                    b_conf.append(conf)
-                offsets.append(len(b_start))
-            span_arr = pa.StructArray.from_arrays(
-                [
-                    pa.array(b_start, pa.int32()),
-                    pa.array(b_end, pa.int32()),
-                    pa.array(b_y, pa.int32()),
-                ],
-                names=["start", "end", "y"],
-            )
-            block_arr = pa.StructArray.from_arrays(
-                [span_arr, pa.array(b_text, pa.string()), pa.array(b_conf, pa.float64())],
-                names=["span", "text", "confidence"],
-            )
-            blocks_arr = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), block_arr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("conv_id")),
-                    rb.column(rb.schema.get_field_index("turn_idx")),
-                    pa.array(methods, pa.string()),
-                    blocks_arr,
-                    pa.array(texts_out, pa.string()),
-                    pa.array([snap] * n, pa.int64()),
-                    pa.array([pid] * n, pa.int32()),
-                    pa.array([core.EXTRACTOR_VERSION] * n, pa.string()),
-                ],
-                names=[f.name for f in EXTRACTED_SCHEMA.fields],
-            )
+        for _, out in extract_batches(batches, force_ocr, snap):
+            yield out
 
     out = df.mapInArrow(run, schema=EXTRACTED_SCHEMA)
     if fast is not None:

@@ -6,10 +6,21 @@ North-rule requirements implemented here:
   records ``src_snapshot_id``, ``extractor_version``, bucket range and
   bucket count, row count, per-method counts, and ``n_convs`` in a
   manifest entry; the rows themselves carry the lineage columns
-  (``job.EXTRACTED_SCHEMA``).  ``n_convs`` is an *estimate* of the
-  range's distinct conversations (``approx_count_distinct``, an HLL++
-  sketch with 5% relative standard deviation), not an exact count; the
-  row and per-method counts are exact.
+  (``job.EXTRACTED_SCHEMA``).  ``n_rows`` and the per-method counts are
+  exact.  ``n_convs`` is the sum over the job's tasks of each task's
+  distinct ``conv_id`` count in the range: exact while every bucket is
+  read by one task, an upper bound when AQE splits a hot bucket over
+  several tasks.
+* **one exchange, metrics in the UDF** — one write is ONE Spark job:
+  scan -> project ``(conv_id, turn_idx, text, part_bucket)`` ->
+  pending-range filter -> rebalance on ``part_bucket`` -> one
+  ``mapInArrow`` (the shared batch extractor, ``job.extract_batches``)
+  -> ``partitionBy("part_bucket")`` dynamic-overwrite write.  The UDF
+  tallies the manifest metrics into a Python accumulator.  It runs in
+  the write job's *result* stage, and the DAGScheduler applies a result
+  task's accumulator update once per partition, so a retried or
+  speculative task attempt counts nothing twice.  Accumulators need a
+  classic session: the sink does not run on Spark Connect.
 * **resumable from checkpoint** — the manifest and lineage unit is a
   *range of conv_id-hash buckets*.  One call runs ONE Spark job over
   every pending range at once; after that job's atomic commit, one
@@ -34,8 +45,10 @@ North-rule requirements implemented here:
   is a pure function of ``conv_id`` and ``(conv_id, turn_idx)`` is
   unique in the input, overwrite-by-bucket is equivalent to a MERGE
   keyed on ``(conv_id, turn_idx)`` — the Iceberg ``MERGE INTO`` this
-  stands in for (see :class:`IcebergSink`).  The write is rebalanced on
-  ``part_bucket``, so each bucket is one file per job.
+  stands in for (see :class:`IcebergSink`).  The rebalance puts each
+  bucket in one task, so each bucket is one file per job unless AQE
+  split it (``OptimizeSkewInRebalancePartitions``, which takes the
+  place of salting on this path).
 
 On a real cluster the same layout maps 1:1 onto an Iceberg table
 partitioned by ``bucket(conv_id, N)``: the pending-range filter becomes a
@@ -54,12 +67,21 @@ import json
 import os
 import shutil
 import tempfile
+import warnings
+from collections import Counter
 from typing import Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.accumulators import AccumulatorParam
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .extraction import core
-from .job import EXTRACTED_SCHEMA, extract_detailed
+from .job import (
+    EXTRACTED_SCHEMA,
+    extract_batches,
+    extract_detailed,
+    extraction_input,
+)
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
@@ -70,6 +92,22 @@ _METHOD_METRICS = {
     "n_markup": core.METHOD_MARKUP,
     "n_plain": core.METHOD_PLAIN,
 }
+# the written rows: the extraction job's columns plus the bucket they are
+# partitioned by
+_SINK_SCHEMA = StructType(
+    EXTRACTED_SCHEMA.fields + [StructField("part_bucket", IntegerType())]
+)
+
+
+class _CountsParam(AccumulatorParam):
+    """Accumulator of ``Counter`` values, merged by adding counts."""
+
+    def zero(self, value):
+        return Counter()
+
+    def addInPlace(self, value1, value2):
+        value1.update(value2)
+        return value1
 
 
 def _bucket_col(num_buckets: int):
@@ -194,7 +232,21 @@ class CheckpointedParquetSink:
         first, then one manifest per range.  A directory written under
         another bucket layout raises ``ValueError`` before anything is
         removed or written.
+
+        A positive ``num_partitions`` pins the width of the rebalance on
+        ``part_bucket``; ``None`` and ``0`` let AQE size it.
+        ``salt_buckets`` is ignored with a ``UserWarning``: AQE splits a
+        hot bucket by size instead.
         """
+        if salt_buckets > 1:
+            warnings.warn(
+                f"CheckpointedParquetSink.write ignores salt_buckets={salt_buckets}: "
+                "the sink extracts over its rebalance on part_bucket, where AQE "
+                "splits a hot bucket by size; salting that key would spread "
+                "every bucket over several files",
+                UserWarning,
+                stacklevel=2,
+            )
         snap = -1 if src_snapshot_id is None else int(src_snapshot_id)
         ranges = _ranges(self.num_buckets, self.num_ranges)
         manifest = load_manifest(self.out_dir)
@@ -217,51 +269,44 @@ class CheckpointedParquetSink:
                     os.path.join(self.data_dir, f"part_bucket={b}"), ignore_errors=True
                 )
         step = ranges[0][1] - ranges[0][0] + 1
-
-        def range_of(b):  # range_id = bucket // step
-            return (b / step).cast("int")
-
-        bucket = _bucket_col(self.num_buckets)
+        df = extraction_input(transcripts).withColumn(
+            "part_bucket", _bucket_col(self.num_buckets)
+        )
         if len(pending) < len(ranges):
-            transcripts = transcripts.where(range_of(bucket).isin(pending))
-        ext = extract_detailed(
-            transcripts,
-            force_ocr=force_ocr,
-            src_snapshot_id=src_snapshot_id,
-            num_partitions=num_partitions,
-            salt_buckets=salt_buckets,
-        ).withColumn("part_bucket", bucket)
-        # the per-range metrics, as conditional aggregates of one observe
-        range_id = range_of(F.col("part_bucket"))
-        aggs = []
-        for r in pending:
-            in_r = range_id == r
-            aggs += [
-                F.sum(in_r.cast("long")).alias(f"n_rows_{r}"),
-                # an estimate, not a count: the HLL++ sketch has 5% relative
-                # SD and can miss by several conversations per range.
-                # Observation forbids DISTINCT aggregates, and an exact
-                # read-back of the written buckets costs a second job.
-                F.approx_count_distinct(F.when(in_r, F.col("conv_id"))).alias(f"n_convs_{r}"),
-            ] + [
-                F.sum((in_r & (F.col("method") == m)).cast("long")).alias(f"{k}_{r}")
-                for k, m in _METHOD_METRICS.items()
-            ]
-        obs = Observation("sink")
+            df = df.where((F.col("part_bucket") / step).cast("int").isin(pending))
+        # each bucket lands in one shuffle partition, so one file per
+        # bucket per job; AQE can still split a hot bucket
+        if num_partitions:
+            df = df.hint("rebalance", num_partitions, "part_bucket")
+        else:
+            df = df.hint("rebalance", "part_bucket")
+        # the UDF runs in the write job's result stage, whose accumulator
+        # updates the DAGScheduler applies once per partition: a retried
+        # or speculative task attempt adds nothing twice
+        counts = transcripts.sparkSession.sparkContext.accumulator(Counter(), _CountsParam())
+
+        def run(batches):
+            # (range_id, method) -> rows; (range_id, None) -> this task's
+            # distinct conv_ids.  Added when the task's input is exhausted.
+            tally: Counter = Counter()
+            convs = set()
+            for in_rb, out_rb in extract_batches(batches, force_ocr, snap):
+                i = in_rb.schema.get_field_index("part_bucket")
+                range_ids = [b // step for b in in_rb.column(i).to_pylist()]
+                tally.update(zip(range_ids, out_rb.column("method").to_pylist()))
+                convs.update(zip(range_ids, out_rb.column("conv_id").to_pylist()))
+                yield out_rb.append_column(in_rb.schema.field(i), in_rb.column(i))
+            tally.update((r, None) for r, _ in convs)
+            counts.add(tally)
+
         (
-            # each bucket lands in one shuffle partition, so one file per
-            # bucket per job; AQE can still split a hot bucket
-            ext.hint("rebalance", "part_bucket")
-            # observed above the exchange: AQE replaces an empty shuffle
-            # stage, and any metrics collected inside it, by an empty
-            # relation
-            .observe(obs, *aggs)
+            df.mapInArrow(run, schema=_SINK_SCHEMA)
             .write.option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .partitionBy("part_bucket")
             .parquet(self.data_dir)
         )
-        got = obs.get
+        got = counts.value
         committed: List[dict] = []
         for r in pending:
             lo, hi = ranges[r]
@@ -273,8 +318,9 @@ class CheckpointedParquetSink:
                 "src_snapshot_id": snap,
                 "extractor_version": core.EXTRACTOR_VERSION,
                 "metrics": {
-                    k: int(got.get(f"{k}_{r}") or 0)
-                    for k in ("n_rows", "n_convs", *_METHOD_METRICS)
+                    "n_rows": sum(n for (rr, m), n in got.items() if rr == r and m is not None),
+                    "n_convs": got[(r, None)],
+                    **{k: got[(r, m)] for k, m in _METHOD_METRICS.items()},
                 },
             }
             _commit(self.out_dir, entry)

@@ -2,6 +2,8 @@
 queries()[name] on Spark and oracle_sql()[name] on DuckDB over the same
 parquet tables, compare row count + column names + order-insensitive
 value hash.  Usage: python scripts/check_queries.py [sf_dir] [name...]
+The last line is the summary ``N ok, M FAIL of T``; the exit status is 1
+when any entry fails.
 """
 
 from __future__ import annotations
@@ -68,10 +70,11 @@ def main() -> int:
     from occular_ocr_spark.queries import release_persists
 
     qs, os_ = queries(), oracle_sql()
-    failures = 0
+    checked = failures = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        checked += 1
         try:
             sdf = fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
@@ -125,6 +128,7 @@ def main() -> int:
         else:
             print(f"ok   {name}: {len(srows)} rows match")
     spark.stop()
+    print(f"{checked - failures} ok, {failures} FAIL of {checked}")
     return 1 if failures else 0
 
 

@@ -3,10 +3,14 @@
 process, expect exit 0 and a valid sink."""
 
 import json
+import os
 import subprocess
 import sys
 
 from occular_ocr_spark.fixtures import write_transcripts_parquet
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run_cli(args):
@@ -14,7 +18,7 @@ def _run_cli(args):
         [sys.executable, "-m", "occular_ocr_spark"] + args,
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=300,
     )
 
@@ -80,6 +84,25 @@ def test_cli_salt_needs_partitions():
     with pytest.raises(SystemExit) as exc:
         main(["--input", "x", "--output", "y", "--salt", "8"])
     assert exc.value.code == 2
+
+
+def test_cli_checkpointed_refuses_salt(monkeypatch):
+    # the sink has no exchange to salt, so --salt with --checkpointed is
+    # refused before Spark starts, with or without --partitions
+    import pytest
+    from pyspark.sql import SparkSession
+
+    from occular_ocr_spark.cli import main
+
+    def no_spark(self):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_spark)
+    for extra in ([], ["--partitions", "0"], ["--partitions", "8"]):
+        with pytest.raises(SystemExit) as exc:
+            main(["--input", "x", "--output", "y", "--checkpointed",
+                  "--salt", "8"] + extra)
+        assert exc.value.code == 2
 
 
 def test_cli_rejects_layout_without_buckets_or_ranges(monkeypatch):

@@ -1,12 +1,13 @@
 """Every queries() entry must match its DuckDB oracle_sql() twin at
 sf0.001 — the local mirror of the driver's correctness gate."""
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scripts.check_queries import TABLES, value_hash  # noqa: E402
 

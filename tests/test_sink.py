@@ -166,6 +166,123 @@ def test_pending_ranges_without_rows_commit_zero_metrics(spark, transcripts, tmp
     assert sorted(rows)[:-1] == [0] * (N_RANGES - 1) and sum(rows) == one_conv.count()
 
 
+def _recount(spark, data_dir, num_buckets, num_ranges):
+    """Each range's manifest metrics, recounted exactly from the rows
+    read back; ranges without rows are absent."""
+    step = num_buckets // num_ranges
+    return {
+        r["range_id"]: r.asDict()
+        for r in spark.read.parquet(data_dir)
+        .groupBy((F.col("part_bucket") / step).cast("int").alias("range_id"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.countDistinct("conv_id").alias("n_convs"),
+            *[
+                F.sum((F.col("method") == m).cast("long")).alias(k)
+                for k, m in sink_mod._METHOD_METRICS.items()
+            ],
+        )
+        .collect()
+    }
+
+
+def test_n_convs_is_exact_when_no_bucket_is_split(spark, transcripts, tmp_path):
+    """No bucket of the fixture is large enough for AQE to split, so each
+    is read by one task and ``n_convs`` equals the distinct conversations
+    of the range's rows read back."""
+    sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
+    entries = sink.write(transcripts, src_snapshot_id=3)
+    exact = _recount(spark, sink.data_dir, N_BUCKETS, N_RANGES)
+    assert {e["range_id"]: e["metrics"]["n_convs"] for e in entries} == {
+        r: exact[r]["n_convs"] if r in exact else 0 for r in range(N_RANGES)
+    }
+
+
+# A Python worker module whose first attempt of partition 0 fails after
+# some Arrow batches went out.  The daemon imports a worker module only
+# if its name starts with "pyspark".
+_RETRY_WORKER = """
+from pyspark import TaskContext
+from pyspark.worker import main  # noqa: F401
+
+from occular_ocr_spark.extraction import core
+
+_extract = core.extract_turn_raw
+_calls = {{}}
+
+
+def _fail_first_attempt(payload, force_ocr=False):
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        n = _calls[ctx.taskAttemptId()] = _calls.get(ctx.taskAttemptId(), 0) + 1
+        if n == 50:
+            open({marker!r}, "w").close()
+            raise RuntimeError("injected failure of a first task attempt")
+    return _extract(payload, force_ocr)
+
+
+core.extract_turn_raw = _fail_first_attempt
+"""
+
+_RETRY_DRIVER = """
+import json, sys
+from pyspark.sql import SparkSession
+from occular_ocr_spark.sink import CheckpointedParquetSink
+
+inp, out = sys.argv[1:]
+spark = (
+    SparkSession.builder.master("local[2,2]")  # a task may fail once
+    .config("spark.python.worker.module", "pyspark_sink_retry_worker")
+    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+entries = CheckpointedParquetSink(out, 16, 4).write(
+    spark.read.parquet(inp), src_snapshot_id=8
+)
+print(json.dumps(entries))
+spark.stop()
+"""
+
+
+def test_retried_task_keeps_metrics_exact(spark, tmp_path):
+    """A sink UDF task that fails midway through its first attempt and is
+    retried adds its counts once: every manifest metric equals an exact
+    recount of the rows written, and no (conv_id, turn_idx) is written
+    twice.  Runs in its own session, where a task may fail once."""
+    import json
+    import subprocess
+    import sys
+
+    from occular_ocr_spark.fixtures import write_transcripts_parquet
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    marker = str(tmp_path / "failed-once")
+    (tmp_path / "pyspark_sink_retry_worker.py").write_text(
+        _RETRY_WORKER.format(marker=marker)
+    )
+    driver = tmp_path / "driver.py"
+    driver.write_text(_RETRY_DRIVER)
+    inp, out = str(tmp_path / "turns.parquet"), str(tmp_path / "sink")
+    write_transcripts_parquet(inp, n_convs=40, seed=7)
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([str(tmp_path), repo]))
+    r = subprocess.run(
+        [sys.executable, str(driver), inp, out],
+        capture_output=True, text=True, cwd=repo, env=env, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert os.path.exists(marker), "no task attempt failed"
+    entries = json.loads(r.stdout.strip().splitlines()[-1])
+
+    exact = _recount(spark, os.path.join(out, "data"), 16, 4)
+    for e in entries:
+        want = exact.get(e["range_id"], dict.fromkeys(e["metrics"], 0))
+        assert e["metrics"] == {k: want[k] for k in e["metrics"]}, e["range_id"]
+    rows = spark.read.parquet(os.path.join(out, "data")).select("conv_id", "turn_idx")
+    assert rows.count() == rows.distinct().count() == spark.read.parquet(inp).count()
+
+
 def test_crash_during_multi_range_commit(spark, transcripts, tmp_path_factory, monkeypatch):
     """A kill after the job committed its data and after the first of
     four manifest commits: the re-run commits only the missing ranges
