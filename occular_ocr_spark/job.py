@@ -3,7 +3,8 @@
 Plan shape (SURVEY.md §3 target lifecycle):
 
     scan -> repartition(hash(conv_id) [+ salt]) -> mapInArrow(extract)
-         -> (optional) window-ordered assembly -> sink
+         -> (optional) conversation_text: two-phase groupBy + array_sort
+            assembly -> sink
 
 All custom logic lives inside Arrow-batched ``mapInArrow`` (no per-row
 Python at the DataFrame level, per BASELINE.json input_hint).  One Arrow
@@ -18,6 +19,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 import zipimport
 from typing import Optional
 
@@ -94,105 +96,6 @@ def repartition_salted(
     if num_partitions:
         return df.repartition(num_partitions, *cols)
     return df.repartition(*cols)
-
-
-# Memo for the two fast-path Column trees below: building them is
-# hundreds of py4j calls (~0.3 s of driver time per extract_detailed
-# invocation, measured), yet the unresolved expression is identical
-# every time and reusable across DataFrames.  Keyed by the live
-# SparkContext identity so a restarted JVM rebuilds instead of holding
-# a stale gateway reference.  Driver-only micro-optimization: at corpus
-# scale it is invisible; on a 5k-row bench pass it was ~40% of wall.
-_EXPR_CACHE: dict = {}
-
-
-def _cached_expr(key: str, builder):
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    ent = _EXPR_CACHE.get(key)
-    if ent is not None and ent[0] is sc:
-        return ent[1]
-    col = builder()
-    _EXPR_CACHE[key] = (sc, col)
-    return col
-
-
-def _plain_safe_predicate():
-    return _cached_expr("plain_safe_predicate", _build_plain_safe_predicate)
-
-
-def _build_plain_safe_predicate():
-    """Conservative JVM-side pre-dispatch: TRUE only when the payload is
-    provably 'plain' under core.dispatch — it contains none of the
-    characters any other method requires (``<`` for HTML hints and
-    markup tags, a backtick for fences, ``{`` for the PDF text layer)
-    and no whitespace beyond space/newline (so Spark ``trim`` ==
-    Python ``str.strip`` exactly).  Any row that fails the test simply
-    takes the Python path, where the authoritative dispatcher decides —
-    a false negative costs a few µs, a false positive cannot happen.
-
-    The exclusion set is EVERY character CPython's ``str.strip()``
-    treats as whitespace (Unicode White_Space plus bidi classes B/S:
-    \\t \\x0B \\f \\r \\x1c-\\x1f \\x85 \\xa0 \\u1680 \\u2000-\\u200a
-    \\u2028 \\u2029 \\u202f \\u205f \\u3000) except space and \\n —
-    Spark's ``trim``/``ltrim`` strip only ASCII space, so any other
-    whitespace (e.g. an NBSP-prefixed payload) would make the Catalyst
-    path diverge from the kernel on offsets and kept lines.
-    """
-    t = F.col("text")
-    return (
-        t.isNotNull()
-        & ~t.contains("<")
-        & ~t.contains("`")
-        & ~t.contains("{")
-        & ~t.rlike(
-            "[\\t\\x0B\\f\\r\\x1c-\\x1f\\x85\\xa0\\u1680\\u2000-\\u200a"
-            "\\u2028\\u2029\\u202f\\u205f\\u3000]"
-        )
-    )
-
-
-def _plain_blocks_expr():
-    return _cached_expr("plain_blocks_expr", _build_plain_blocks_expr)
-
-
-def _build_plain_blocks_expr():
-    """core.extract_plain as a pure Catalyst expression: per non-blank
-    line one block ``(span(start, end, y), trim(line), 1.0)`` with
-    source offsets accumulated across lines — bit-identical to the
-    Python kernel for payloads passing :func:`_plain_safe_predicate`."""
-    lines = F.split(F.col("text"), "\n")
-    indexed = F.transform(
-        lines, lambda ln, i: F.struct(ln.alias("ln"), i.alias("y"))
-    )
-    zero = F.struct(
-        F.lit(0).cast("int").alias("off"),
-        F.array().cast(ArrayType(BLOCK_TYPE)).alias("blocks"),
-    )
-
-    def step(acc, x):
-        ln = x["ln"]
-        trimmed = F.trim(ln)
-        lead = F.length(ln) - F.length(F.ltrim(ln))
-        start = (acc["off"] + lead).cast("int")
-        blk = F.struct(
-            F.struct(
-                start.alias("start"),
-                (start + F.length(trimmed)).cast("int").alias("end"),
-                x["y"].cast("int").alias("y"),
-            ).alias("span"),
-            trimmed.alias("text"),
-            F.lit(1.0).alias("confidence"),
-        )
-        return F.struct(
-            (acc["off"] + F.length(ln) + 1).cast("int").alias("off"),
-            F.when(
-                trimmed != "", F.concat(acc["blocks"], F.array(blk))
-            ).otherwise(acc["blocks"]).alias("blocks"),
-        )
-
-    return F.aggregate(indexed, zero, step, lambda acc: acc["blocks"])
 
 
 def _guard_zipimport_rereads() -> None:
@@ -332,13 +235,14 @@ def extract_detailed(
     src_snapshot_id: Optional[int] = None,
     num_partitions: Optional[int] = None,
     salt_buckets: int = 0,
-    jvm_plain_fast_path: bool = True,
+    jvm_plain_fast_path: bool = False,
 ) -> DataFrame:
     """Detailed extraction: one output row per turn, with blocks + lineage.
 
     The analog of ``ocr_detailed()`` (``ocr_skel/__init__.py:104-135``).
     Output schema mirrors FIXTURES.md §2 plus the north rule's lineage
-    columns (src_snapshot_id, partition_id, extractor_version).
+    columns (src_snapshot_id, partition_id, extractor_version).  Every
+    turn goes through one ``mapInArrow`` over :func:`extract_batches`.
 
     ``num_partitions``: ``None`` runs no exchange (the caller already
     partitioned), ``0`` an AQE-sized salted exchange and a positive int
@@ -346,14 +250,18 @@ def extract_detailed(
     that exchange, so ``salt_buckets > 1`` without one is a
     ``ValueError`` rather than a silent no-op.
 
-    ``jvm_plain_fast_path``: payloads that are PROVABLY plain (see
-    :func:`_plain_safe_predicate`) are extracted by pure Catalyst
-    expressions and never enter a Python worker — nor the salted
-    exchange, since there is no Python stage to balance for them.  At
-    corpus scale this removes both the Arrow transfer and the shuffle
-    for the plain fraction of the data; the remaining rows take the
-    usual scan -> salted exchange -> mapInArrow path.
+    ``jvm_plain_fast_path`` is ignored; ``True`` warns with a
+    ``UserWarning`` because the JVM plain fast path was removed.  Only
+    the benchmark's traced mode still passes it (``False``); the
+    benchmark-v2 change removes that call and this keyword with it.
     """
+    if jvm_plain_fast_path:
+        warnings.warn(
+            "extract_detailed ignores jvm_plain_fast_path=True: the JVM plain "
+            "fast path was removed; every turn runs the mapInArrow kernel",
+            UserWarning,
+            stacklevel=2,
+        )
     if salt_buckets > 1 and num_partitions is None:
         raise ValueError(
             f"salt_buckets={salt_buckets} needs an exchange to salt: pass "
@@ -361,30 +269,6 @@ def extract_detailed(
         )
     df = extraction_input(df)
     snap = -1 if src_snapshot_id is None else int(src_snapshot_id)
-    fast = None
-    if jvm_plain_fast_path:
-        safe = _plain_safe_predicate()
-        staged = df.where(safe).select(
-            "conv_id", "turn_idx", _plain_blocks_expr().alias("blocks")
-        )
-        fast = staged.select(
-            "conv_id",
-            "turn_idx",
-            F.lit(core.METHOD_PLAIN).alias("method"),
-            "blocks",
-            # "\n".join of the block texts (__init__.py:93-101)
-            F.array_join(
-                F.transform("blocks", lambda b: b["text"]), "\n"
-            ).alias("text"),
-            F.lit(snap).cast("long").alias("src_snapshot_id"),
-            # lineage: the partition that produced the row (the scan
-            # partition here; the Arrow stage's partition on the UDF path)
-            F.spark_partition_id().alias("partition_id"),
-            F.lit(core.EXTRACTOR_VERSION).alias("extractor_version"),
-        )
-        # ~safe is TRUE for null payloads too (safe is a strict false
-        # there), so the Python path keeps the None-payload guard
-        df = df.where(~safe)
     if num_partitions is not None:
         df = repartition_salted(df, num_partitions, salt_buckets)
 
@@ -392,10 +276,7 @@ def extract_detailed(
         for _, out in extract_batches(batches, force_ocr, snap):
             yield out
 
-    out = df.mapInArrow(run, schema=EXTRACTED_SCHEMA)
-    if fast is not None:
-        out = out.unionByName(fast)
-    return out
+    return df.mapInArrow(run, schema=EXTRACTED_SCHEMA)
 
 
 def extract_text(df: DataFrame, **kwargs) -> DataFrame:

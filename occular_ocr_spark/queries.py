@@ -2436,8 +2436,8 @@ GROUP BY doc_id
 def q_extract_plain_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL extraction UDF run over the documents table (payloads are
     plain text, so the extracted text is SQL-expressible: trimmed
-    content lines) — cross-checks the mapInPandas path itself against
-    the DuckDB oracle."""
+    content lines) — every document goes through the ``mapInArrow``
+    kernel, cross-checked against the DuckDB oracle."""
     from .job import extract_detailed
 
     d = _t(spark, sf_dir, "documents").select(

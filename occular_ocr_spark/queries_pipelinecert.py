@@ -1,9 +1,9 @@
-"""Pipeline-certification catalog, round 4 (wave 98): four operators
+"""Pipeline-certification catalog, round 4 (wave 98): three operators
 that certify the EXTRACTION JOB's operational contract — lineage
-stamping, rerun idempotence, salt invariance, and JVM-fast-path
-parity — as gate-checked catalog entries (until now these properties
-lived only in pytest; here each becomes a value-hash-checked 1-row
-certificate over the real pipeline).
+stamping, rerun idempotence and salt invariance — as gate-checked
+catalog entries (until now these properties lived only in pytest; here
+each becomes a value-hash-checked 1-row certificate over the real
+pipeline).
 
 All entries run ``job.extract_detailed`` over the flagship synthetic
 payloads (documents-derived, the ``extract_transcripts`` wrappers).
@@ -18,9 +18,6 @@ payloads (documents-derived, the ``extract_transcripts`` wrappers).
 * ``salted_repartition_equiv`` — an AQE-sized exchange salted 8 ways
   vs unsalted: identical per-turn text (P1's skew salt must not change
   results).
-* ``fastpath_parity_audit`` — jvm_plain_fast_path on vs off over
-  plain payloads: identical per-turn text — the ADVICE-r2
-  whitespace-parity fix held down by the correctness gate itself.
 
 House contract: DuckDB value-hash oracle with identical aliases
 (each certificate reduces to counts + TRUE flags the oracle states
@@ -78,17 +75,6 @@ def _payload_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("int").alias("turn_idx"),
         F.lit("user").alias("role"),
         payload.alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-    )
-
-
-def _plain_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        F.lit("conv").alias("conv_id"),
-        F.col("doc_id").cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.col("text"),
         F.lit(None).cast("string").alias("tool"),
     )
 
@@ -218,40 +204,16 @@ def q_salted_repartition_equiv(
 ORACLE_SALTED_REPARTITION_EQUIV = _CERT_ORACLE
 
 
-# ---------------------------------------------------------------------------
-# fastpath_parity_audit
-# ---------------------------------------------------------------------------
-
-
-def q_fastpath_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM plain fast path on vs off over plain payloads — the
-    whitespace-parity contract, gate-checked."""
-    from .job import extract_detailed
-
-    a = extract_detailed(
-        _plain_frame(spark, sf_dir), jvm_plain_fast_path=True
-    )
-    b = extract_detailed(
-        _plain_frame(spark, sf_dir), jvm_plain_fast_path=False
-    )
-    return _equiv_cert(a, b)
-
-
-ORACLE_FASTPATH_PARITY_AUDIT = _CERT_ORACLE
-
-
 PIPELINECERT_QUERIES = {
     "lineage_columns_audit": q_lineage_columns_audit,
     "idempotent_rerun_audit": q_idempotent_rerun_audit,
     "salted_repartition_equiv": q_salted_repartition_equiv,
-    "fastpath_parity_audit": q_fastpath_parity_audit,
 }
 
 PIPELINECERT_ORACLES = {
     "lineage_columns_audit": ORACLE_LINEAGE_COLUMNS_AUDIT,
     "idempotent_rerun_audit": ORACLE_IDEMPOTENT_RERUN_AUDIT,
     "salted_repartition_equiv": ORACLE_SALTED_REPARTITION_EQUIV,
-    "fastpath_parity_audit": ORACLE_FASTPATH_PARITY_AUDIT,
 }
 
 _q.QUERIES.update(PIPELINECERT_QUERIES)

@@ -39,23 +39,6 @@ def test_table_cache_rebuilds_for_a_different_session_object(spark):
     assert fresh.count() == df.count()
 
 
-def test_expr_cache_reuses_column_within_context(spark):
-    from occular_ocr_spark.job import _EXPR_CACHE, _plain_blocks_expr, _plain_safe_predicate
-
-    c1 = _plain_blocks_expr()
-    c2 = _plain_blocks_expr()
-    assert c1 is c2
-    p1 = _plain_safe_predicate()
-    assert _plain_safe_predicate() is p1
-    # the cache is keyed by the live SparkContext: poisoning the owner
-    # forces a rebuild (the restart-safety path)
-    ent = _EXPR_CACHE["plain_blocks_expr"]
-    _EXPR_CACHE["plain_blocks_expr"] = (object(), ent[1])
-    c3 = _plain_blocks_expr()
-    assert c3 is not c1
-    _EXPR_CACHE["plain_blocks_expr"] = ent  # restore for other tests
-
-
 def test_stream_state_width_sets_and_restores_conf(spark):
     from occular_ocr_spark.queries_ext import (
         _STREAM_STATE_PARTITIONS,

@@ -5,6 +5,7 @@ the BASELINE.json correctness invariant.
 
 import pytest
 
+from occular_ocr_spark.extraction.core import extract_turn
 from occular_ocr_spark.fixtures import generate_transcripts, transcripts_pandas
 from occular_ocr_spark.job import conversation_text, extract_detailed, extract_text
 from occular_ocr_spark.oracle import extract_rows
@@ -79,3 +80,57 @@ def test_confidence_bounds_dataframe(spark, transcripts_df):
         F.explode("blocks").alias("b")
     ).filter((F.col("b.confidence") < 0.0) | (F.col("b.confidence") > 1.0))
     assert bad.count() == 0
+
+
+# Edge payloads: None, empty, a method-hint character in plain text, and
+# the Unicode whitespace that Python's str.strip removes but Spark's trim
+# does not (NBSP, \x1c, \u2028, \u3000, \x85, tab, thin space).
+EDGE_PAYLOADS = [
+    (0, "plain one line"),
+    (1, "  leading spaces\nsecond line  \n\nfourth"),
+    (2, None),
+    (3, ""),
+    (4, "<html><p>html text long enough to pass the area gate right here</p></html>"),
+    (5, "has a { brace but plain otherwise"),
+    (6, "tab\there"),
+    (7, "trailing newline\n"),
+    (8, "json-ish but no brace blocks key at all"),
+    (9, "\xa0hello nbsp prefix"),
+    (10, "file sep\x1cinside"),
+    (11, "line sep\u2028here"),
+    (12, "ideographic\u3000space"),
+    (13, "next line\x85char"),
+    (14, "\u2009thin space lead\nand a kept line"),
+]
+
+
+def test_edge_payloads_match_kernel(spark):
+    df = spark.createDataFrame(
+        [("p", i, t) for i, t in EDGE_PAYLOADS],
+        "conv_id string, turn_idx int, text string",
+    )
+    out = {
+        r["turn_idx"]: r
+        for r in extract_detailed(
+            df, num_partitions=4, salt_buckets=2, src_snapshot_id=3
+        ).collect()
+    }
+    for idx, payload in EDGE_PAYLOADS:
+        exp = extract_turn(payload)
+        got = out[idx]
+        assert got["method"] == exp["method"], idx
+        assert got["text"] == exp["text"], idx
+        got_blocks = [
+            {
+                "span": {
+                    "start": b["span"]["start"],
+                    "end": b["span"]["end"],
+                    "y": b["span"]["y"],
+                },
+                "text": b["text"],
+                "confidence": b["confidence"],
+            }
+            for b in got["blocks"]
+        ]
+        assert got_blocks == exp["blocks"], idx
+        assert got["src_snapshot_id"] == 3

@@ -1,8 +1,7 @@
 """Semantics tests for the wave-98 pipeline certifications — each
 certificate's flags must hold and its counts must equal the corpus
 size; a failure here means the extraction job broke one of its
-operational contracts (lineage, determinism, salt invariance,
-fast-path parity)."""
+operational contracts (lineage, determinism, salt invariance)."""
 
 from __future__ import annotations
 
@@ -14,7 +13,6 @@ import duckdb
 from occular_ocr_spark import queries as Q
 from occular_ocr_spark.queries_pipelinecert import (
     _SNAP,
-    q_fastpath_parity_audit,
     q_idempotent_rerun_audit,
     q_lineage_columns_audit,
     q_salted_repartition_equiv,
@@ -65,15 +63,10 @@ def test_salt_invariance(spark):
     _assert_cert(cert.collect()[0], _n_docs())
 
 
-def test_fastpath_parity(spark):
-    _assert_cert(q_fastpath_parity_audit(spark, SF).collect()[0], _n_docs())
-
-
 def test_registered_in_catalog():
     for name in (
         "lineage_columns_audit",
         "idempotent_rerun_audit",
         "salted_repartition_equiv",
-        "fastpath_parity_audit",
     ):
         assert name in Q.QUERIES and name in Q.ORACLES

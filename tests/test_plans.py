@@ -76,6 +76,9 @@ def test_extraction_plan_single_arrow_stage_pruned_scan(spark):
     # exactly one Python/Arrow eval stage, after one hash exchange
     assert n_nodes(p, "MapInArrow") + n_nodes(p, "ArrowEvalPython") == 1
     assert n_nodes(p, "Exchange") == 1
+    # one code path: the source is read once and nothing is unioned
+    assert n_nodes(p, "Union") == 0
+    assert n_nodes(p, "Scan parquet") == 1
     # scan pruned to the 2 needed source columns (lang/source/n_chars never read)
     read_schema = p.split("ReadSchema", 1)[1].splitlines()[0]
     assert "doc_id" in read_schema and "text" in read_schema

@@ -7,6 +7,8 @@ rasterization bottleneck, pipeline.py:139-141).  The partition_id
 lineage column makes the spread directly observable.
 """
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,13 +23,8 @@ def _mega_fixture(spark):
 
 
 def test_unsalted_mega_conversation_serializes(spark):
-    # fast_path off: this test observes the Python stage's partitioning
-    # specifically (plain rows on the JVM fast path keep their scan
-    # partition and never ride the salted exchange at all)
     df, pdf = _mega_fixture(spark)
-    out = extract_detailed(
-        df, num_partitions=8, salt_buckets=0, jvm_plain_fast_path=False
-    )
+    out = extract_detailed(df, num_partitions=8, salt_buckets=0)
     parts = (
         out.groupBy("conv_id")
         .agg(F.countDistinct("partition_id").alias("n_parts"))
@@ -39,9 +36,7 @@ def test_unsalted_mega_conversation_serializes(spark):
 
 def test_salted_mega_conversation_spreads(spark):
     df, pdf = _mega_fixture(spark)
-    out = extract_detailed(
-        df, num_partitions=8, salt_buckets=4, jvm_plain_fast_path=False
-    )
+    out = extract_detailed(df, num_partitions=8, salt_buckets=4)
     agg = {
         r["conv_id"]: r["n_parts"]
         for r in out.groupBy("conv_id")
@@ -67,6 +62,20 @@ def test_salt_without_exchange_raises(spark):
         extract_detailed(df, salt_buckets=8)
     extract_detailed(df, num_partitions=0, salt_buckets=8)  # salted exchange
     extract_detailed(df, salt_buckets=1)  # one bucket is no salt
+
+
+def test_removed_fast_path_keyword_is_ignored(spark):
+    """``jvm_plain_fast_path`` only survives for the benchmark's traced
+    mode: ``True`` warns, ``False`` is silent and changes nothing."""
+    df, _ = _mega_fixture(spark)
+    with pytest.warns(UserWarning, match="jvm_plain_fast_path"):
+        extract_detailed(df, jvm_plain_fast_path=True)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        off = extract_detailed(df, jvm_plain_fast_path=False)
+    cols = ("conv_id", "turn_idx", "method", "text")
+    rows = lambda d: sorted(map(tuple, d.select(*cols).collect()))
+    assert rows(off) == rows(extract_detailed(df))
 
 
 # ---------------------------------------------------------------------------
