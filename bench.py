@@ -93,169 +93,6 @@ def _tiers() -> tuple[list[str], list[str]]:
     return headline, full
 
 
-# retained for provenance: the pre-tier flat ordering (rounds 2-4);
-# cheap scans first (JVM warm-up), heavy shuffle/join families after.
-HEADLINE = [
-    "scan_prune",
-    # the flagship extraction number runs FIRST after the untimed
-    # warm-up passes, while the session's own ambient load is one cheap
-    # scan — at sf0.1 the whole extraction is sub-second, so late-list
-    # placement made its turns/sec hostage to whatever heavy query ran
-    # before it (r3: 5,816 vs r2: 7,369 was ordering/load noise, not a
-    # regression; the 4M-turn scaling corpus is the citable throughput)
-    "extract_transcripts",
-    "filter_gates",
-    "dispatch_case",
-    "reading_order",
-    "order_restore",
-    "topk_per_group",
-    "part_supplier_revenue",
-    "anti_join",
-    "set_ops",
-    "rollup_daily",
-    "join_broadcast",
-    "multi_join",
-    "groupby_agg",
-    "cube_counts",
-    "group_quantiles",
-    "group_quantiles_approx",
-    "group_quantiles_dist",
-    "distinct_agg",
-    "window_funcs",
-    "json_roundtrip",
-    "explode_tokens",
-    "text_assembly",
-    "sessionize",
-    "asof_join",
-    "window_tumbling",
-    "pivot_events",
-    "range_join_bucketed",
-    "lang_quality",
-    "quality_score",
-    "token_count",
-    "sample_stratified",
-    "tfidf_topk",
-    "doc_fingerprint",
-    "text_normalize",
-    "repetition_ratio",
-    "length_histogram",
-    "inverted_index",
-    "domain_mix_weights",
-    "decontaminate",
-    "approx_distinct",
-    "pack_sequences",
-    "event_funnel",
-    "curation_funnel",
-    "dedup_exact",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_minhash_lsh",
-    "dedup_minhash_verify",
-    "dedup_ngram_jaccard",
-    "dedup_embed_cosine",
-    "dedup_embed_cosine_mp",
-    "dedup_groups",
-    "dedup_keep_canonical",
-    "cc_largestar",
-    "cosine_topk",
-    "ann_ivf_assign",
-    "ann_ivf_search",
-    "ann_lsh_buckets",
-    "ann_lsh_search",
-    "kmeans_lloyd",
-    "multimodal_meta",
-    "multimodal_frames",
-    "multimodal_features",
-    "multimodal_resize",
-    "skew_join_salted",
-    "snapshot_diff",
-    "data_quality_checks",
-    "rolling_window",
-    "bigram_pmi",
-    "cohort_retention",
-    "train_test_split",
-    "chunk_documents",
-    "heavy_hitters_cms",
-    "event_props_json",
-    "pagerank_bipartite",
-    "bpe_merges",
-    "sparse_retrieval",
-    "pii_redact",
-    "dup_span_report",
-    "scrub_dup_spans",
-    "unigram_logprob",
-    "quality_funnel",
-    "cdc_chunks",
-    "profile_table",
-    "zorder_cluster",
-    "turn_structure_qa",
-    "context_windows",
-    "link_extract",
-    "pack_sequences_sharded",
-    "loss_mask_spans",
-    "tool_transitions",
-    "conversation_dedup",
-    "merge_adjacent_turns",
-    "bm25_topk",
-    "url_canonicalize",
-    "winnow_fingerprints",
-    "scd2_dimension",
-    "semdedup",
-    "merge_upsert",
-    "triangle_count",
-    "sample_k_per_group",
-    "embed_quantize_int8",
-    "extract_plain_docs",
-    "assemble_conversations",
-    "sql_udf_extract",
-    "incremental_extract",
-    # streaming entries: fn() RUNS the availableNow streaming job at
-    # DataFrame-construction time, so the timer covers staging + the
-    # full micro-batch run, not just the final read.
-    "streaming_extract",
-    "streaming_turn_rate",
-    "streaming_progress",
-    "streaming_dedup",
-    "streaming_enrich",
-    "streaming_sessions",
-    "streaming_join",
-    "winnow_matches",
-    "ts_gapfill",
-    "mix_apply_sample",
-    "sorted_neighborhood",
-    "vocab_encode",
-    "jaccard_prefix_filter",
-    "fuzzy_join_del1",
-    "sketch_rollup",
-    "ann_recall_eval",
-    # round 4
-    "lsh_recall_eval",
-    "minhash_est_error",
-    "dedup_incremental",
-    "context_truncate",
-    "ewma_trailing",
-    "changelog_compact",
-    "score_deciles",
-    "script_profile",
-    "reply_latency_stats",
-    "bigram_lm_logprob",
-    "dedup_threshold_sweep",
-    "kfold_assign",
-    "hourly_profile",
-    # round 4, wave 3-4 (drift / hygiene / training assembly)
-    "psi_drift",
-    "ks_statistic",
-    "boilerplate_scrub",
-    "corr_matrix",
-    "domain_blocklist",
-    "zscore_outliers",
-    "preference_pairs",
-    "padding_waste",
-    "dataset_card_stats",
-    "cross_dedup_sources",
-]
-
-
 def warmup(spark, sf_dir: str) -> None:
     """Untimed pre-pass: JVM JIT + codegen + parquet footer caches + the
     Python worker pool all warm up here, so query 1's timing is the

@@ -2780,7 +2780,6 @@ from . import queries_training as _queries_training  # noqa: E402,F401
 from . import queries_quality as _queries_quality  # noqa: E402,F401
 from . import queries_maintenance as _queries_maintenance  # noqa: E402,F401
 from . import queries_evalharness as _queries_evalharness  # noqa: E402,F401
-from . import queries_graph as _queries_graph  # noqa: E402,F401
 from . import queries_corpus as _queries_corpus  # noqa: E402,F401
 from . import queries_selection as _queries_selection  # noqa: E402,F401
 from . import queries_dedupqa as _queries_dedupqa  # noqa: E402,F401
@@ -2829,21 +2828,13 @@ from . import queries_checksum as _queries_checksum  # noqa: E402,F401
 from . import queries_quantsurface as _queries_quantsurface  # noqa: E402,F401
 from . import queries_eventtime as _queries_eventtime  # noqa: E402,F401
 from . import queries_annotation as _queries_annotation  # noqa: E402,F401
-from . import queries_identities as _queries_identities  # noqa: E402,F401
 from . import queries_sampling2 as _queries_sampling2  # noqa: E402,F401
 from . import queries_survival2 as _queries_survival2  # noqa: E402,F401
 from . import queries_ablation as _queries_ablation  # noqa: E402,F401
-from . import queries_cbostats as _queries_cbostats  # noqa: E402,F401
 from . import queries_sre as _queries_sre  # noqa: E402,F401
-from . import queries_bigrowth as _queries_bigrowth  # noqa: E402,F401
-from . import queries_joinprune as _queries_joinprune  # noqa: E402,F401
-from . import queries_winrewrite as _queries_winrewrite  # noqa: E402,F401
-from . import queries_decomp as _queries_decomp  # noqa: E402,F401
 from . import queries_causal as _queries_causal  # noqa: E402,F401
-from . import queries_gridfit as _queries_gridfit  # noqa: E402,F401
 from . import queries_spans as _queries_spans  # noqa: E402,F401
 from . import queries_attribution as _queries_attribution  # noqa: E402,F401
-from . import queries_depdiscovery as _queries_depdiscovery  # noqa: E402,F401
 from . import queries_procmine as _queries_procmine  # noqa: E402,F401
 from . import queries_lifecycle as _queries_lifecycle  # noqa: E402,F401
 from . import queries_planted as _queries_planted  # noqa: E402,F401

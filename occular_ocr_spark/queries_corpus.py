@@ -39,8 +39,7 @@ queries.py, ``event_markov`` queries_analytics.py), the eval family
 (``ndcg_eval`` / ``rbo_rankings`` queries_evalharness.py), the
 curation family (``unigram_logprob`` queries_curation.py), the
 transcript family (``conversation_dedup`` queries_transcript.py), and
-the graph family (``cc_largestar`` queries_pipeline.py,
-``bfs_distances`` queries_graph.py).
+the graph family (``cc_largestar`` queries_pipeline.py).
 """
 
 from __future__ import annotations
@@ -450,8 +449,7 @@ def q_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly what the 2-core exists to discard).  Oracle: DuckDB
     level-synchronous recursive peel bounded by the same cap — past
     the fixpoint extra rounds are idempotent, so a converged Spark
-    result equals the capped oracle exactly (the ``bfs_distances``
-    idempotence trick, applied to peeling).
+    result equals the capped oracle exactly.
     """
     pairs = _q.q_dedup_minhash_verify(spark, sf_dir).select("doc_a", "doc_b")
     edges = (

@@ -13,7 +13,12 @@ pytest-only, here run end-to-end under the driver's DuckDB gate via the
 Import contract: this module is imported at the BOTTOM of
 ``queries.py`` and self-registers into ``queries.QUERIES`` /
 ``queries.ORACLES``.  It only touches attributes that ``queries.py``
-defines above its import line, so either module can be imported first.
+defines above its import line.  Import ``queries`` first:
+``queries_pipeline``, further down that import tail, reads this
+module's oracles, so importing this module first fails.
+
+The streaming entries' operators (``turn_rate``,
+``conversation_progress``) live here with their only callers.
 """
 
 from __future__ import annotations
@@ -362,9 +367,72 @@ def _mem_name(prefix: str) -> str:
     return f"{prefix}_{os.getpid()}_{_STAGE_SEQ[0]}"
 
 
+def conversation_progress(stream: DataFrame) -> DataFrame:
+    """Custom stateful streaming operator (applyInPandasWithState): a
+    per-conversation running turn counter + high-water turn_idx.
+
+    The streaming analog of the reference's indexed result collection
+    (pipeline.py:167-188): state keyed by conv_id survives across
+    micro-batches (and across restarts via the checkpoint), so a
+    conversation arriving in fragments over many files/batches still
+    reports a single consistent cumulative row per update.
+
+    Scale: state is (long, int) per live conversation, hash-distributed
+    by the stream's groupBy — bounded, skew-tolerant, and exactly the
+    shape applyInPandasWithState's RocksDB-backed state store is for.
+    """
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    def fn(key, pdfs, state: GroupState):
+        if state.exists:
+            n, mx = state.get
+        else:
+            n, mx = 0, -1
+        for pdf in pdfs:
+            n += len(pdf)
+            if len(pdf):
+                mx = max(mx, int(pdf["turn_idx"].max()))
+        state.update((n, mx))
+        yield pd.DataFrame(
+            {"conv_id": [key[0]], "n_turns": [n], "max_turn": [mx]}
+        )
+
+    return stream.groupBy("conv_id").applyInPandasWithState(
+        fn,
+        outputStructType="conv_id string, n_turns long, max_turn int",
+        stateStructType="n long, mx int",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def turn_rate(
+    stream: DataFrame,
+    watermark: str = "10 minutes",
+    window: str = "5 minutes",
+) -> DataFrame:
+    """Watermarked per-role turn-rate over event-time windows.
+
+    The monitoring aggregation a live extraction pipeline runs next to
+    the extractor: late turns beyond the watermark are dropped, state is
+    bounded, and each finalized window emits one row per role.
+    """
+    return (
+        stream.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("win"), "role")
+        .agg(F.count("*").alias("n_turns"))
+        .select(
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
+            "role",
+            "n_turns",
+        )
+    )
+
+
 def q_streaming_turn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The watermarked event-time window aggregation
-    (:func:`streaming.turn_rate`) run as a real streaming query into a
+    (:func:`turn_rate`) run as a real streaming query into a
     memory sink (complete mode) and returned as its final result table.
 
     Complete mode makes the final table equal to the full group-by
@@ -374,7 +442,7 @@ def q_streaming_turn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py.  Window starts are emitted as epoch
     seconds: integer arithmetic on both engines, no timezone surface.
     """
-    from .streaming import read_transcript_stream, turn_rate
+    from .streaming import read_transcript_stream
 
     indir = _stage_stream_input(spark, sf_dir)
     name = _mem_name("tr")
@@ -412,7 +480,7 @@ GROUP BY 1, 2
 
 def q_streaming_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom stateful operator
-    (:func:`streaming.conversation_progress`,
+    (:func:`conversation_progress`,
     ``applyInPandasWithState``) run as a real streaming query.
 
     Update mode emits one row per conversation per micro-batch it
@@ -420,7 +488,7 @@ def q_streaming_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the final state however ``availableNow`` batched the files —
     batching-independent, like the other entries.
     """
-    from .streaming import conversation_progress, read_transcript_stream
+    from .streaming import read_transcript_stream
 
     indir = _stage_stream_input(spark, sf_dir)
     name = _mem_name("prog")

@@ -41,14 +41,15 @@ North-rule requirements implemented here:
   written with dynamic partition overwrite, so re-running a range
   *replaces* its buckets instead of appending; a pending range's old
   buckets are removed before the job (manifest first), so a bucket the
-  new input leaves empty keeps no stale rows.  Because ``part_bucket``
-  is a pure function of ``conv_id`` and ``(conv_id, turn_idx)`` is
-  unique in the input, overwrite-by-bucket is equivalent to a MERGE
-  keyed on ``(conv_id, turn_idx)`` — the Iceberg ``MERGE INTO`` this
-  stands in for (see :class:`IcebergSink`).  The rebalance puts each
-  bucket in one task, so each bucket is one file per job unless AQE
-  split it (``OptimizeSkewInRebalancePartitions``, which takes the
-  place of salting on this path).
+  new input leaves empty keeps no stale rows.  A bucket that cannot be
+  removed fails the write with its ``OSError``, and its range stays
+  pending.  Because ``part_bucket`` is a pure function of ``conv_id``
+  and ``(conv_id, turn_idx)`` is unique in the input, overwrite-by-bucket
+  is equivalent to a MERGE keyed on ``(conv_id, turn_idx)`` — the
+  Iceberg ``MERGE INTO`` this stands in for (see :class:`IcebergSink`).
+  The rebalance puts each bucket in one task, so each bucket is one
+  file per job unless AQE split it (``OptimizeSkewInRebalancePartitions``,
+  which takes the place of salting on this path).
 
 On a real cluster the same layout maps 1:1 onto an Iceberg table
 partitioned by ``bucket(conv_id, N)``: the pending-range filter becomes a
@@ -265,9 +266,9 @@ class CheckpointedParquetSink:
                 os.remove(p)
             lo, hi = ranges[r]
             for b in range(lo, hi + 1):
-                shutil.rmtree(
-                    os.path.join(self.data_dir, f"part_bucket={b}"), ignore_errors=True
-                )
+                d = os.path.join(self.data_dir, f"part_bucket={b}")
+                if os.path.isdir(d):
+                    shutil.rmtree(d)
         step = ranges[0][1] - ranges[0][0] + 1
         df = extraction_input(transcripts).withColumn(
             "part_bucket", _bucket_col(self.num_buckets)

@@ -12,15 +12,16 @@ incrementally, and a restart resumes from the last committed micro-batch
 
 At production scale the file source becomes a Kafka or Iceberg
 incremental-scan source and the sink an Iceberg table; the plan shape
-(source -> ArrowEvalPython -> sink, plus a watermarked window agg for
-monitoring) is identical.
+(source -> ArrowEvalPython -> sink) is identical.  The catalog's
+streaming entries (``queries_ext``) hold the monitoring aggregations
+that run over the same stream.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..job import extract_detailed
@@ -43,34 +44,6 @@ def read_transcript_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
     return reader.parquet(input_dir)
-
-
-def read_rate_turn_stream(
-    spark: SparkSession, rows_per_second: int = 100
-) -> DataFrame:
-    """UNBOUNDED synthetic turn stream from Spark's built-in ``rate``
-    source, mapped to the transcript shape — proof the extraction
-    pipeline is source-agnostic, not file-source-shaped (VERDICT r2
-    missing #4): the same ``extract_detailed`` plan runs over a source
-    with no files, no end, and a live event-time column.  A Kafka
-    source differs only in the ``format("kafka")`` + value-parsing
-    projection.
-    """
-    rate = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", int(rows_per_second))
-        .load()
-    )
-    return rate.select(
-        F.concat(F.lit("conv-"), (F.col("value") / 10).cast("long")).alias("conv_id"),
-        (F.col("value") % 10).cast("int").alias("turn_idx"),
-        F.when(F.col("value") % 2 == 0, F.lit("user"))
-        .otherwise(F.lit("assistant"))
-        .alias("role"),
-        F.concat(F.lit("rate turn payload "), F.col("value")).alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.col("timestamp").alias("ts"),
-    )
 
 
 def extract_stream(
@@ -101,68 +74,3 @@ def extract_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def conversation_progress(stream: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): a
-    per-conversation running turn counter + high-water turn_idx.
-
-    The streaming analog of the reference's indexed result collection
-    (pipeline.py:167-188): state keyed by conv_id survives across
-    micro-batches (and across restarts via the checkpoint), so a
-    conversation arriving in fragments over many files/batches still
-    reports a single consistent cumulative row per update.
-
-    Scale: state is (long, int) per live conversation, hash-distributed
-    by the stream's groupBy — bounded, skew-tolerant, and exactly the
-    shape applyInPandasWithState's RocksDB-backed state store is for.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            n, mx = state.get
-        else:
-            n, mx = 0, -1
-        for pdf in pdfs:
-            n += len(pdf)
-            if len(pdf):
-                mx = max(mx, int(pdf["turn_idx"].max()))
-        state.update((n, mx))
-        yield pd.DataFrame(
-            {"conv_id": [key[0]], "n_turns": [n], "max_turn": [mx]}
-        )
-
-    return stream.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType="conv_id string, n_turns long, max_turn int",
-        stateStructType="n long, mx int",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def turn_rate(
-    stream: DataFrame,
-    watermark: str = "10 minutes",
-    window: str = "5 minutes",
-) -> DataFrame:
-    """Watermarked per-role turn-rate over event-time windows.
-
-    The monitoring aggregation a live extraction pipeline runs next to
-    the extractor: late turns beyond the watermark are dropped, state is
-    bounded, and each finalized window emits one row per role.
-    """
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "role")
-        .agg(F.count("*").alias("n_turns"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "role",
-            "n_turns",
-        )
-    )

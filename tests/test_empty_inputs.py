@@ -133,11 +133,9 @@ REPRESENTATIVE = [
     "label_propagation",
     "k_anonymity",
     "cusum_drift",
-    # round-4 final-session waves 15-24 (degree_assortativity /
-    # cohens_kappa / hhi_source_concentration join the excluded
-    # global aggregates below: single stat row, NULL surfaces)
-    "clustering_coefficient",
-    "bfs_distances",
+    # round-4 final-session waves 15-24 (cohens_kappa /
+    # hhi_source_concentration join the excluded global aggregates
+    # below: single stat row, NULL surfaces)
     "rrf_fusion",
     "gini_concentration",
     "autocorr_daily",
@@ -252,7 +250,7 @@ def test_entry_is_total_on_empty_tables(spark, empty_sf_dir, name):
 @pytest.mark.parametrize(
     "name",
     ["auc_rank", "chi_square_independence", "welch_ttest", "mann_kendall",
-     "degree_assortativity", "cohens_kappa", "hhi_source_concentration"],
+     "cohens_kappa", "hhi_source_concentration"],
 )
 def test_stat_entries_null_row_on_empty(spark, empty_sf_dir, name):
     # global-aggregate statistics return their single row with NULL
@@ -263,7 +261,6 @@ def test_stat_entries_null_row_on_empty(spark, empty_sf_dir, name):
     assert len(rows) == 1
     surface = {"auc_rank": "auc", "chi_square_independence": "chi2",
                "welch_ttest": "t_stat", "mann_kendall": "tau",
-               "degree_assortativity": "assortativity",
                "cohens_kappa": "kappa",
                "hhi_source_concentration": "hhi"}[name]
     assert rows[0][surface] is None

@@ -36,20 +36,6 @@ def test_shapley_reduces_before_grid(spark):
     assert "hashpartitioning(u" in p
 
 
-def test_fd_scan_two_level_aggregation(spark):
-    p = plan_of(Q.QUERIES["fd_candidate_scan"](spark, SF_DIR))
-    # (pair, a, b) partial agg then per-LHS-group reduction
-    assert p.count("HashAggregate") >= 4
-    assert "partial_count" in p
-
-
-def test_bloom_filter_audit_broadcasts_sketch(spark):
-    p = plan_of(Q.QUERIES["bloom_runtime_filter_audit"](spark, SF_DIR))
-    # the 32-word filter joins in broadcast; the fact table never
-    # sort-merge-joins against the sketch
-    assert "BroadcastHashJoin" in p or "BroadcastExchange" in p
-
-
 def test_span_wave_single_arrow_stage(spark):
     p = plan_of(Q.QUERIES["span_offset_audit"](spark, SF_DIR))
     # the real extractor appears exactly once (one Arrow stage) —

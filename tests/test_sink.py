@@ -351,6 +351,36 @@ def test_snapshot_change_drops_buckets_left_empty(spark, transcripts, tmp_path):
     assert gone not in {r[6] for r in rows}
 
 
+def test_failed_bucket_removal_raises(spark, transcripts, tmp_path, monkeypatch):
+    """A stale bucket the sink cannot remove fails the write and leaves
+    the sink incomplete; a re-run once removal works again reads back
+    only the new snapshot."""
+    bucket = sink_mod._bucket_col(N_BUCKETS)
+    gone = transcripts.select(bucket.alias("b")).first()["b"]
+    snap2 = transcripts.where(bucket != gone)
+
+    sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
+    sink.write(transcripts, src_snapshot_id=1)
+    unlink = os.unlink
+
+    def deny_parquet(path, *args, **kwargs):
+        if str(path).endswith(".parquet"):
+            raise PermissionError(13, "Permission denied", str(path))
+        return unlink(path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "unlink", deny_parquet)
+        with pytest.raises(OSError):
+            sink.write(snap2, src_snapshot_id=2)
+    assert not sink.is_complete()
+
+    sink.write(snap2, src_snapshot_id=2)
+    rows = _rows(spark, sink)
+    assert len(rows) == snap2.count()
+    assert {r[4] for r in rows} == {2}
+    assert gone not in {r[6] for r in rows}
+
+
 def test_is_complete_checks_lineage(spark, transcripts, tmp_path, monkeypatch):
     """A sink whose ranges record different snapshots, or another
     extractor version, is not complete, though every range has a manifest."""

@@ -7,14 +7,32 @@ from pyspark.sql import functions as F
 
 from occular_ocr_spark.fixtures import write_transcripts_parquet
 from occular_ocr_spark.job import extract_detailed
-from occular_ocr_spark.streaming import (
-    conversation_progress,
-    extract_stream,
-    read_transcript_stream,
-    turn_rate,
-)
+from occular_ocr_spark import queries  # noqa: F401  (queries_ext imports only after the catalog)
+from occular_ocr_spark.queries_ext import conversation_progress, turn_rate
+from occular_ocr_spark.streaming import extract_stream, read_transcript_stream
 
 KEY = ["conv_id", "turn_idx"]
+
+
+def read_rate_turn_stream(spark, rows_per_second=100):
+    """Unbounded synthetic turn stream from Spark's built-in ``rate``
+    source, mapped to the transcript shape: a source with no files, no
+    end, and a live event-time column."""
+    rate = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", int(rows_per_second))
+        .load()
+    )
+    return rate.select(
+        F.concat(F.lit("conv-"), (F.col("value") / 10).cast("long")).alias("conv_id"),
+        (F.col("value") % 10).cast("int").alias("turn_idx"),
+        F.when(F.col("value") % 2 == 0, F.lit("user"))
+        .otherwise(F.lit("assistant"))
+        .alias("role"),
+        F.concat(F.lit("rate turn payload "), F.col("value")).alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        F.col("timestamp").alias("ts"),
+    )
 
 
 def _rows(df, cols=("conv_id", "turn_idx", "method", "text")):
@@ -136,7 +154,6 @@ def test_rate_source_unbounded_extraction(spark):
     import time
 
     from occular_ocr_spark.job import extract_detailed
-    from occular_ocr_spark.streaming import read_rate_turn_stream
 
     turns = read_rate_turn_stream(spark, rows_per_second=200)
     q = (
@@ -173,8 +190,6 @@ def test_processing_time_trigger_monotone_progress(spark):
     decreases — so the streaming designs are demonstrably not
     file-drain-shaped."""
     import time
-
-    from occular_ocr_spark.streaming import read_rate_turn_stream
 
     turns = read_rate_turn_stream(spark, rows_per_second=300)
     q = (
