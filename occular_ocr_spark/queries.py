@@ -20,7 +20,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .functions.multimodal import FEATURE_DIM
 from .pipeline_e2e import (
     _LSH_BAND_CAP,
     _MINHASH_BAND_ROWS,
@@ -31,6 +30,7 @@ from .pipeline_e2e import (
     _synth_transcripts,
     _verified_pairs,
 )
+from .queries_multimodal import FEATURE_DIM
 
 _TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -1005,6 +1005,43 @@ JOIN sizes sa ON sa.doc_id = s.doc_a
 JOIN sizes sb ON sb.doc_id = s.doc_b
 WHERE round(CAST(n_shared AS DOUBLE) / (sa.n_sh + sb.n_sh - n_shared), 6)
       >= {_MINHASH_VERIFY_THRESH}
+"""
+
+
+# Oracles of two queries_ext entries that other catalog modules also read
+# at import time.  They live here, above the import tail, so every reader
+# finds them in a fully initialised module whatever the import order.
+
+# dedup_groups.  Recursive-CTE twin: enumerate (node,
+# reachable-smaller-label) pairs and take the min per node.  The
+# `r.lbl < e.dst` guard prunes propagation to labels that could never win
+# while keeping the component minimum (which is smaller than every other
+# member) flowing everywhere.
+ORACLE_DEDUP_GROUPS = f"""
+WITH RECURSIVE pairs AS ({ORACLE_DEDUP_MINHASH_VERIFY}),
+edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  UNION ALL
+  SELECT doc_b AS src, doc_a AS dst FROM pairs),
+reach AS (
+  SELECT CAST(doc_id AS BIGINT) AS node, CAST(doc_id AS BIGINT) AS lbl
+  FROM documents
+  UNION
+  SELECT e.dst AS node, r.lbl
+  FROM reach r JOIN edges e ON e.src = r.node
+  WHERE r.lbl < e.dst)
+SELECT node AS doc_id, min(lbl) AS group_id
+FROM reach GROUP BY node
+"""
+
+# group_quantiles (also group_quantiles_dist's oracle, in queries_scale)
+ORACLE_GROUP_QUANTILES = """
+SELECT l_returnflag,
+       round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
+       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95_price,
+       count(*) AS n_items
+FROM lineitem
+GROUP BY l_returnflag
 """
 
 
@@ -2564,10 +2601,10 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal column plumbing: treat content as an opaque binary
     column, run a mapInPandas 'decode' over Arrow batches producing
     typed metadata.  The decode itself is a deterministic stand-in
-    (real image/audio libs absent — see functions/multimodal.py), but
+    (real image/audio libs absent — see queries_multimodal.py), but
     the schema, batching, and UDF signature are the real thing.
     """
-    from .functions.multimodal import decode_meta
+    from .queries_multimodal import decode_meta
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
@@ -2591,7 +2628,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     Payloads here are ASCII bytes, so the DuckDB twin can express the
     chunking with substr arithmetic — cross-checking the expansion
     contract itself (count, indices, content)."""
-    from .functions.multimodal import sample_frames
+    from .queries_multimodal import sample_frames
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
@@ -2617,7 +2654,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction over binary payloads (byte-bucket histogram
     stand-in for a vision encoder), canonicalized to scalar rows.
 
-    The kernel emits ``array<float>`` (functions/multimodal.py:120);
+    The kernel emits ``array<float>`` (queries_multimodal.extract_features);
     array columns are unsortable by generic rows-only comparators, so
     the catalog entry posexplodes to ``(doc_id, dim_idx, value)`` — one
     row per feature dimension, every column scalar.  The float32 value
@@ -2625,7 +2662,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     double -> float32 -> double chain with ``CAST(... AS REAL)`` so both
     engines round through identical IEEE bits.
     """
-    from .functions.multimodal import extract_features
+    from .queries_multimodal import extract_features
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
@@ -2763,8 +2800,9 @@ ORACLES: Dict[str, str] = {
 
 
 # Catalog extensions (dedup groups, k-means, streaming entries)
-# self-register into QUERIES/ORACLES on import; queries_ext only touches
-# attributes defined above this line, so either import order works.
+# self-register into QUERIES/ORACLES on import.  The oracles several of
+# them read at import time are defined above this line, so queries_ext
+# and queries_pipeline may each be imported before this module.
 from . import queries_ext as _queries_ext  # noqa: E402,F401
 from . import queries_pipeline as _queries_pipeline  # noqa: E402,F401
 from . import queries_scale as _queries_scale  # noqa: E402,F401
@@ -2790,26 +2828,19 @@ from . import queries_fidelity as _queries_fidelity  # noqa: E402,F401
 from . import queries_payoff as _queries_payoff  # noqa: E402,F401
 from . import queries_regression as _queries_regression  # noqa: E402,F401
 from . import queries_mlprep as _queries_mlprep  # noqa: E402,F401
-from . import queries_survival as _queries_survival  # noqa: E402,F401
 from . import queries_experiment as _queries_experiment  # noqa: E402,F401
-from . import queries_decode as _queries_decode  # noqa: E402,F401
 from . import queries_coreset as _queries_coreset  # noqa: E402,F401
 from . import queries_calibration as _queries_calibration  # noqa: E402,F401
-from . import queries_signal as _queries_signal  # noqa: E402,F401
 from . import queries_nonparam as _queries_nonparam  # noqa: E402,F401
-from . import queries_robust as _queries_robust  # noqa: E402,F401
 from . import queries_estimation as _queries_estimation  # noqa: E402,F401
 from . import queries_spectral as _queries_spectral  # noqa: E402,F401
 from . import queries_dependence as _queries_dependence  # noqa: E402,F401
 from . import queries_design as _queries_design  # noqa: E402,F401
 from . import queries_distfit as _queries_distfit  # noqa: E402,F401
 from . import queries_clustereval as _queries_clustereval  # noqa: E402,F401
-from . import queries_evalmetrics as _queries_evalmetrics  # noqa: E402,F401
 from . import queries_diagnostics as _queries_diagnostics  # noqa: E402,F401
 from . import queries_inference as _queries_inference  # noqa: E402,F401
-from . import queries_privacy2 as _queries_privacy2  # noqa: E402,F401
 from . import queries_regdiag as _queries_regdiag  # noqa: E402,F401
-from . import queries_distshape as _queries_distshape  # noqa: E402,F401
 from . import queries_abtest as _queries_abtest  # noqa: E402,F401
 from . import queries_ragops as _queries_ragops  # noqa: E402,F401
 from . import queries_retrieval2 as _queries_retrieval2  # noqa: E402,F401
@@ -2827,10 +2858,7 @@ from . import queries_extractqa as _queries_extractqa  # noqa: E402,F401
 from . import queries_checksum as _queries_checksum  # noqa: E402,F401
 from . import queries_quantsurface as _queries_quantsurface  # noqa: E402,F401
 from . import queries_eventtime as _queries_eventtime  # noqa: E402,F401
-from . import queries_annotation as _queries_annotation  # noqa: E402,F401
 from . import queries_sampling2 as _queries_sampling2  # noqa: E402,F401
-from . import queries_survival2 as _queries_survival2  # noqa: E402,F401
-from . import queries_ablation as _queries_ablation  # noqa: E402,F401
 from . import queries_sre as _queries_sre  # noqa: E402,F401
 from . import queries_causal as _queries_causal  # noqa: E402,F401
 from . import queries_spans as _queries_spans  # noqa: E402,F401

@@ -55,8 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import queries as _q
-from .queries import _t, q_dedup_minhash_verify
-from .queries_ext import ORACLE_DEDUP_GROUPS
+from .queries import ORACLE_DEDUP_GROUPS, _t, q_dedup_minhash_verify
 
 # ---------------------------------------------------------------------------
 # char_lm_bpb

@@ -52,9 +52,9 @@ Reference parity: axis-B net-new corpus ops (the reference
 Bodhi42/Occular-ocr engine is per-document OCR only; SURVEY.md §2,
 "LLM-data pipeline ops").  Extends the drift family (``psi_drift``,
 ``cusum_drift``, ``mann_kendall``), the stats family
-(``welch_ttest``, ``chi_square_independence``, ``wilcoxon_signed_rank``),
-the calibration family (``calibration_curve``), and the seasonality
-family (``weekday_seasonality``, ``holt_smoothing``).
+(``welch_ttest``, ``chi_square_independence``), the calibration family
+(``calibration_curve``), and the seasonality family
+(``weekday_seasonality``).
 """
 
 from __future__ import annotations

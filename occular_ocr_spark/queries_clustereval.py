@@ -163,7 +163,7 @@ def q_bcubed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_BCUBED_EVAL = f"""
-WITH labels AS ({_qe.ORACLE_DEDUP_GROUPS}),
+WITH labels AS ({_q.ORACLE_DEDUP_GROUPS}),
 truth AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id,
          md5(coalesce(text, '')) AS th

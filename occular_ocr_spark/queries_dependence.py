@@ -69,7 +69,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from . import queries as _q
 from .queries import _t
 
-# rand_index length-bucket width / cap (the cochran_armitage grid).
+# rand_index length-bucket width / cap.
 _RI_W = 100
 _RI_K = 6
 

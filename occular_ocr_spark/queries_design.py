@@ -15,7 +15,7 @@ segmentation, extreme-comovement, and sampling-design surfaces —
   check (powers of two add exactly in binary floating point), the
   entropy lower bound via the exact n·log₂ n identity, expected code
   length, and redundancy.  The coding-theory companion to
-  ``encoding_planner`` / ``token_entropy``.
+  ``token_entropy``.
 * ``texttiling_boundaries`` — TextTiling-style topic-shift detection
   per source: distinct-token Jaccard between doc_id-consecutive
   documents (adjacency via per-source rank + a (source, rank)→

@@ -9,7 +9,7 @@ surfaces —
   keys to positions, documented), with max and mean absolute
   prediction error.  A small max error says a 1-layer learned index
   (or a linear zone map) replaces the B-tree; the indexing companion
-  to ``range_partition_plan`` / ``zone_map_prune``.
+  to ``zone_map_prune``.
 * ``simpson_paradox_check`` — does the en-vs-other token-count gap
   flip sign inside source strata?  Aggregate gap, per-stratum gaps
   (micro-quantized), flip count, and the row-mass share of flipped
@@ -29,8 +29,7 @@ surfaces —
   series (up/down runs; zero diffs dropped, documented):
   E[R] = (2n−1)/3, Var[R] = (16n−29)/90 with n = #diffs+1.  Detects
   short-scale oscillation the median-based ``runs_test`` is blind
-  to; completes the randomness family with ``hurst_rs`` /
-  ``autocorr_daily``.
+  to; completes the randomness family with ``autocorr_daily``.
 
 House contract: DuckDB value-hash oracle with identical aliases,
 self-registration into queries.QUERIES / ORACLES on import, semantics

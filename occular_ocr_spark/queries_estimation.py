@@ -29,14 +29,13 @@ model-selection, and abundance-estimation surfaces —
   ``markov_entropy_rate`` identity), parameters are observed-support
   counts (V−1 vs #cells−#contexts), and both AICs are PURE INTEGER
   micro-units — no float accumulates anywhere.  The sequence-model
-  companion to ``encoding_planner`` (storage) and ``bigram_lm_logprob``
-  (scoring).
+  companion to ``bigram_lm_logprob`` (scoring).
 * ``capture_recapture`` — Lincoln–Petersen / Chapman estimate of the
   total vocabulary from two "captures" (even vs odd ``doc_id``
   halves): marks per type are one min/max agg, the Chapman estimator
   (n_A+1)(n_B+1)/(m+1) − 1 is row-local, and observed coverage is
-  reported against it.  The two-sample companion to
-  ``chao1_richness`` (single-sample) and ``heaps_law`` (growth).
+  reported against it.  The two-sample companion to ``heaps_law``
+  (growth).
 
 House contract: DuckDB value-hash oracle with identical aliases,
 self-registration into queries.QUERIES / ORACLES on import, semantics
@@ -230,7 +229,7 @@ def q_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rendezvous (HRW) hashing report at K=``_RV_K`` nodes.
 
     Per (doc, node) the portable md5 hash (first 8 hex digits →
-    BIGINT, the ``feature_hashing`` construct) forms the exact key
+    BIGINT) forms the exact key
     h·16 + node, so argmax-with-node-tiebreak is one integer ``max``.
     shard8 = argmax over nodes 0..K−1; shard9 adds node K; a doc
     "moves" iff the new node wins — rendezvous theory says the moved

@@ -13,9 +13,7 @@ pytest-only, here run end-to-end under the driver's DuckDB gate via the
 Import contract: this module is imported at the BOTTOM of
 ``queries.py`` and self-registers into ``queries.QUERIES`` /
 ``queries.ORACLES``.  It only touches attributes that ``queries.py``
-defines above its import line.  Import ``queries`` first:
-``queries_pipeline``, further down that import tail, reads this
-module's oracles, so importing this module first fails.
+defines above its import line.
 
 The streaming entries' operators (``turn_rate``,
 ``conversation_progress``) live here with their only callers.
@@ -55,28 +53,6 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _q.q_dedup_minhash_verify(spark, sf_dir).select("doc_a", "doc_b")
     labels = _min_label_components(_q._t(spark, sf_dir, "documents"), pairs)
     return labels.select("doc_id", F.col("lbl").alias("group_id"))
-
-
-# Recursive-CTE twin: enumerate (node, reachable-smaller-label) pairs and
-# take the min per node.  The `r.lbl < e.dst` guard prunes propagation to
-# labels that could never win while keeping the component minimum (which
-# is smaller than every other member) flowing everywhere.
-ORACLE_DEDUP_GROUPS = f"""
-WITH RECURSIVE pairs AS ({_q.ORACLE_DEDUP_MINHASH_VERIFY}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM pairs),
-reach AS (
-  SELECT CAST(doc_id AS BIGINT) AS node, CAST(doc_id AS BIGINT) AS lbl
-  FROM documents
-  UNION
-  SELECT e.dst AS node, r.lbl
-  FROM reach r JOIN edges e ON e.src = r.node
-  WHERE r.lbl < e.dst)
-SELECT node AS doc_id, min(lbl) AS group_id
-FROM reach GROUP BY node
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -772,16 +748,6 @@ def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GROUP_QUANTILES = """
-SELECT l_returnflag,
-       round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
-       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95_price,
-       count(*) AS n_items
-FROM lineitem
-GROUP BY l_returnflag
-"""
-
-
 _APPROX_PCT_ACCURACY = 1000  # Spark guarantee: rank error <= 1/accuracy
 
 
@@ -995,7 +961,7 @@ FROM (SELECT c_custkey FROM customer EXCEPT SELECT o_custkey FROM orders)
 
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-resize plumbing under the oracle gate: binary payloads ->
-    :func:`functions.multimodal.resize_image` (mapInPandas; the
+    :func:`queries_multimodal.resize_image` (mapInPandas; the
     resample body is the documented deterministic stand-in, the Arrow
     batch shape and schema are real) -> stable digest of the returned
     payload plus the target dimensions.
@@ -1004,7 +970,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     harnesses canonicalize scalars reliably, and it proves byte-exact
     payload passthrough end-to-end through the Python worker.
     """
-    from .functions.multimodal import resize_image
+    from .queries_multimodal import resize_image
 
     d = _q._t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
@@ -1049,7 +1015,7 @@ EXT_QUERIES = {
 }
 
 EXT_ORACLES = {
-    "dedup_groups": ORACLE_DEDUP_GROUPS,
+    "dedup_groups": _q.ORACLE_DEDUP_GROUPS,
     "kmeans_lloyd": ORACLE_KMEANS_LLOYD,
     "streaming_extract": ORACLE_STREAMING_EXTRACT,
     "streaming_turn_rate": ORACLE_STREAMING_TURN_RATE,
@@ -1059,7 +1025,7 @@ EXT_ORACLES = {
     "streaming_join": ORACLE_STREAMING_JOIN,
     "multimodal_resize": ORACLE_MULTIMODAL_RESIZE,
     "cube_counts": ORACLE_CUBE_COUNTS,
-    "group_quantiles": ORACLE_GROUP_QUANTILES,
+    "group_quantiles": _q.ORACLE_GROUP_QUANTILES,
     "group_quantiles_approx": ORACLE_GROUP_QUANTILES_APPROX,
     "set_ops": ORACLE_SET_OPS,
     "distinct_agg": ORACLE_DISTINCT_AGG,

@@ -8,17 +8,15 @@ surfaces —
   the three cross-source reductions (Σ(nᵢ−1)ln Sᵢ², Σ(nᵢ−1)Sᵢ²,
   Σ1/(nᵢ−1)) micro-quantized per group before summing, the
   T = [(N−k)ln Sp² − Σ(nᵢ−1)ln Sᵢ²]/C final row-local.  The
-  parametric (normal-theory) companion to ``brown_forsythe`` —
-  that one is robust to non-normality, this one is the textbook
-  baseline it is compared against.
+  parametric (normal-theory) textbook test of equal variances.
 * ``friedman_test`` — Friedman's repeated-measures rank test over the
   weeks × day-slot design: blocks are complete 7-day windows from the
   first observed day, treatments are the 7 slots, the blocked value
   is the daily event count.  Doubled midranks (2c+t+1) keep every
   intermediate an exact BIGINT; the tie-general statistic
   Q = (k−1)·Σⱼ(R2ⱼ−n(k+1))² / (A2 − nk(k+1)²) is one exact-integer
-  division.  The blocked companion to ``kruskal_wallis`` (unblocked
-  ranks) and ``weekday_seasonality`` (means, no test).
+  division.  The blocked rank test beside ``weekday_seasonality``
+  (means, no test).
 * ``ljung_box`` — the Ljung–Box portmanteau Q over the daily count
   series at lags 1..7: autocorrelations from the exact
   DECIMAL(38,0) deviation products (the ``autocorr_daily`` doctrine,

@@ -10,6 +10,10 @@ is the real production pattern.
 
 Replays the reference's lazy per-worker model-init pattern
 (``registry.py:36-39``) for the decoder handle.
+
+Catalog-only: the ``multimodal_*`` entries of ``queries`` and
+``queries_ext`` call it.  It imports no other catalog module, so it
+adds no cycle to ``queries``' import tail.
 """
 
 from __future__ import annotations

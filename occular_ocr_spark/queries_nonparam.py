@@ -8,7 +8,7 @@ and lexical-growth surfaces —
   integer even for .5 midranks, so the rank sum is an exact BIGINT),
   tie-corrected normal approximation, plus the U/(n1·n2) effect size
   (the rank-biserial/AUC reading of U — the test-statistic companion
-  to ``auc_rank``).  The unpaired twin of ``wilcoxon_signed_rank``.
+  to ``auc_rank``).
 * ``heaps_law`` — Heaps'-law vocabulary-growth fit V = k·N^β over
   word-BIGRAM types (the synthetic unigram vocabulary saturates in
   one bucket — the ``submodular_coverage`` precedent): docs are cut
@@ -16,7 +16,7 @@ and lexical-growth surfaces —
   contributes its FIRST bucket (one min-agg — never a running
   distinct), and the (ln N_cum, ln V_cum) curve is OLS-fitted over
   the B bucket points.  The growth-dynamics companion to
-  ``chao1_richness`` (asymptote) and ``zipf_fit`` (distribution).
+  ``zipf_fit`` (distribution).
 * ``markov_entropy_rate`` — entropy rate of the per-user event-type
   Markov chain: H = (Σ_i n_i·ln n_i − Σ_ij n_ij·ln n_ij)/N from the
   exact transition-cell counts (the ``event_markov`` cells), with
@@ -56,9 +56,8 @@ aggs over the type table.
 Reference parity: axis-B net-new corpus ops (the reference
 Bodhi42/Occular-ocr engine is per-document OCR only; SURVEY.md §2,
 "LLM-data pipeline ops").  Extends the hypothesis-test family
-(``welch_ttest``, ``wilcoxon_signed_rank``, ``ks_statistic``,
-``bh_fdr``), the vocabulary family (``chao1_richness``,
-``good_turing_counts``, ``zipf_fit``), and the sequence family
+(``welch_ttest``, ``ks_statistic``, ``bh_fdr``), the vocabulary family
+(``good_turing_counts``, ``zipf_fit``), and the sequence family
 (``event_markov``, ``mann_kendall``).
 """
 
@@ -588,10 +587,10 @@ FROM agg
 
 def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald–Wolfowitz runs test: the daily event-count series is
-    dichotomized against its own LOWER median (exact value, the
-    theil_sen median discipline; days equal to the median are
-    dropped, the classical convention), runs of consecutive
-    same-side days are counted, and z uses the exact run moments
+    dichotomized against its own LOWER median (exact value; days
+    equal to the median are dropped, the classical convention), runs
+    of consecutive same-side days are counted, and z uses the exact
+    run moments
     E[R] = 2·n1·n2/n + 1, Var[R] = 2n1n2(2n1n2−n)/(n²(n−1)).  Too
     FEW runs = regime persistence, too many = oscillation — the
     randomness companion to ``mann_kendall``.

@@ -285,7 +285,7 @@ def q_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DEDUP_TOKEN_SAVINGS = f"""
-WITH labels AS ({_qe.ORACLE_DEDUP_GROUPS}),
+WITH labels AS ({_q.ORACLE_DEDUP_GROUPS}),
 toks AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id,
          CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_toks

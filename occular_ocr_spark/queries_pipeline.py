@@ -74,7 +74,7 @@ def q_dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DEDUP_KEEP_CANONICAL = f"""
-WITH labels AS ({_qe.ORACLE_DEDUP_GROUPS})
+WITH labels AS ({_q.ORACLE_DEDUP_GROUPS})
 SELECT group_id AS doc_id, count(*) AS group_size
 FROM labels GROUP BY group_id
 """
@@ -184,7 +184,7 @@ def q_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CC_LARGESTAR = _qe.ORACLE_DEDUP_GROUPS
+ORACLE_CC_LARGESTAR = _q.ORACLE_DEDUP_GROUPS
 
 
 # ---------------------------------------------------------------------------
@@ -889,8 +889,6 @@ JOIN l{_LP_ROUNDS} l USING (doc_id)
 ORACLE_LABEL_PROPAGATION = _lp_oracle()
 
 
-from .queries_ext import ORACLE_DEDUP_GROUPS as _ORACLE_DEDUP_GROUPS
-
 # ---------------------------------------------------------------------------
 # dedup_cluster_stats — near-dup component size histogram
 # ---------------------------------------------------------------------------
@@ -938,7 +936,7 @@ def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DEDUP_CLUSTER_STATS = f"""
-WITH labels AS ({_ORACLE_DEDUP_GROUPS}),
+WITH labels AS ({_q.ORACLE_DEDUP_GROUPS}),
 sizes AS (
   SELECT group_id, CAST(count(*) AS BIGINT) AS size
   FROM labels GROUP BY group_id),

@@ -21,8 +21,7 @@ AFTER the index exists —
   ±1 (Achlioptas) sign matrix and report the min/mean/max pairwise
   distance-ratio distortion.  Components micro-quantize BEFORE the
   projection, so projections, squared distances, and ratios are all
-  exact integers.  The dimensionality-reduction companion to
-  ``pca_2d`` (data-driven) — this one is data-OBLIVIOUS, the kind a
+  exact integers.  Data-OBLIVIOUS dimensionality reduction, the kind a
   100 TB pipeline can apply with zero training passes.
 * ``retrieval_diversity`` — result-set redundancy audit: for each of
   the {_RD_Q} highest-df terms, the mean pairwise token-set Jaccard

@@ -28,7 +28,6 @@ other catalog entries hand to reviewers —
   the naive lag-1 forecast: U² = Σ(fitₜ−yₜ)² / Σ(yₜ₋₁−yₜ)² over
   t ≥ 2, both sides scaled by the same exact n·D factor so the ratio
   is an exact-integer division; U < 1 ⇔ the trend beats persistence.
-  The forecast-eval companion to ``holt_smoothing``.
 
 House contract: DuckDB value-hash oracle with identical aliases,
 self-registration into queries.QUERIES / ORACLES on import, semantics

@@ -1947,7 +1947,7 @@ SCALE_ORACLES = {
     "chunk_documents": ORACLE_CHUNK_DOCUMENTS,
     "streaming_sessions": ORACLE_STREAMING_SESSIONS,
     "heavy_hitters_cms": ORACLE_HEAVY_HITTERS_CMS,
-    "group_quantiles_dist": _q.ORACLES["group_quantiles"],
+    "group_quantiles_dist": _q.ORACLE_GROUP_QUANTILES,
     "event_props_json": ORACLE_EVENT_PROPS_JSON,
     "pagerank_bipartite": ORACLE_PAGERANK_BIPARTITE,
     "bpe_merges": ORACLE_BPE_MERGES,

@@ -15,8 +15,7 @@ resolution, and lexical-burstiness surfaces —
   statistics (cents-quantized): α̂ = k / Σ ln(x_i/x_(k+1)), with the
   tie-safe identity Σ_top-k ln x_i = Σ_top-(k+1) ln x_i − ln x_min
   so boundary ties cannot perturb the sum.  The heavy-tail
-  companion to ``gumbel_maxima`` (block maxima) and ``zipf_fit``
-  (rank-frequency).
+  companion to ``zipf_fit`` (rank-frequency).
 * ``negbin_fit`` — negative-binomial method-of-moments fit of the
   per-(user, day) event-count cells INCLUDING structural zeros (the
   users × days grid): dispersion index v/m̄, NB r = m̄²/(v−m̄),

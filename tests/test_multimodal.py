@@ -4,7 +4,7 @@ row-expansion contract of the stubbed decode/feature/resize/frame UDFs."""
 import numpy as np
 from pyspark.sql import functions as F
 
-from occular_ocr_spark.functions.multimodal import (
+from occular_ocr_spark.queries_multimodal import (
     FEATURE_DIM,
     FRAME_BYTES,
     decode_meta,

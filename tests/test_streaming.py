@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from occular_ocr_spark.fixtures import write_transcripts_parquet
 from occular_ocr_spark.job import extract_detailed
-from occular_ocr_spark import queries  # noqa: F401  (queries_ext imports only after the catalog)
 from occular_ocr_spark.queries_ext import conversation_progress, turn_rate
 from occular_ocr_spark.streaming import extract_stream, read_transcript_stream
 
